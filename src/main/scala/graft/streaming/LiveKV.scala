@@ -114,6 +114,10 @@ object LiveKV {
     * offsets. Client retries are deduped in-batch by applyIncrement;
     * for cross-batch retries compose an upstream
     * `.dropDuplicates("clientId", "reqId")` (as [[liveState]] does).
+    * Each micro-batch is evaluated once: its writes are cached for the
+    * two actions the sink runs on them (shard routing and the fold), so
+    * an upstream stateful operator runs, and counts its rows, once per
+    * batch. The cache is dropped before the commit marker is written.
     * Returns the configured writer; caller starts it.
     *
     * At production scale `shard` generalizes to any key-range/bucket
@@ -156,24 +160,29 @@ object LiveKV {
           // gets don't change state (applyIncrement drops them): fold
           // and route WRITES only, so a get-only batch never rereads
           // and rewrites identical shard partitions as a new version
-          val writes = batch.filter(col("kind") =!= "get")
-          // registration-free shardOf spelling: the micro-batch session
-          // clone does not see temp functions registered at plan time,
-          // and per-batch routing volume is tiny anyway
-          val touched = writes
-            .select(graft.shard.Key2Shard.shardOf(col("key")).as("shard"))
-            .distinct().collect().map(_.getInt(0)).toSet
-          if (touched.nonEmpty) {
-            val basePaths = currentShardPaths(stateDir, m)
-              .collect { case (shard, path) if touched(shard) => path }
-            val base =
-              if (basePaths.isEmpty) Seq.empty[(String, String)].toDF("key", "value")
-              else s.read.schema("key STRING, value STRING").parquet(basePaths.toSeq: _*)
-            graft.kv.KVEngine.applyIncrement(base, writes)
-              .withColumn("shard", graft.shard.Key2Shard.shardOf(col("key")))
-              .write.partitionBy("shard").mode("overwrite")
-              .parquet(s"$stateDir/v$batchId")
-          }
+          // two actions read `writes`; without the cache each one would
+          // re-run the upstream plan, stateful operators included
+          val writes = batch.filter(col("kind") =!= "get").persist()
+          val touched = try {
+            // registration-free shardOf spelling: the micro-batch session
+            // clone does not see temp functions registered at plan time,
+            // and per-batch routing volume is tiny anyway
+            val shards = writes
+              .select(graft.shard.Key2Shard.shardOf(col("key")).as("shard"))
+              .distinct().collect().map(_.getInt(0)).toSet
+            if (shards.nonEmpty) {
+              val basePaths = currentShardPaths(stateDir, m)
+                .collect { case (shard, path) if shards(shard) => path }
+              val base =
+                if (basePaths.isEmpty) Seq.empty[(String, String)].toDF("key", "value")
+                else s.read.schema("key STRING, value STRING").parquet(basePaths.toSeq: _*)
+              graft.kv.KVEngine.applyIncrement(base, writes)
+                .withColumn("shard", graft.shard.Key2Shard.shardOf(col("key")))
+                .write.partitionBy("shard").mode("overwrite")
+                .parquet(s"$stateDir/v$batchId")
+            }
+            shards
+          } finally writes.unpersist(blocking = true)
           // single atomic create — no delete/rename window; the touched
           // manifest is the version dir's shard=* listing, complete
           // before the marker exists. A write-free batch commits an

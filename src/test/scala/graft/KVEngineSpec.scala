@@ -160,6 +160,60 @@ class KVEngineSpec extends SparkSpec {
     assert(ck.get("missing") == "")
   }
 
+  test("Clerk.get serves the applied map: 0 jobs at 1k and 100k logged ops, equal to replay") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    /** Jobs started while `body` runs, every queued event delivered. */
+    def jobsIn[T](body: => T): (T, Int) = {
+      org.apache.spark.graftbus.BusFlush.flush(sc)
+      val j0 = jobs.get()
+      val out = body
+      org.apache.spark.graftbus.BusFlush.flush(sc)
+      (out, jobs.get() - j0)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val group = new graft.kv.ClerkGroup(spark)
+      val clerks = (0 until 5).map(c => group.clerk(c.toLong))
+      val keys = (0 until 200).map(i => s"k$i")
+      val rnd = new Random(17L)
+      // puts keep values short at 100k ops; duplicates and late resends
+      // are the retries the ack table must absorb
+      var logged = 0
+      def logUntil(n: Int): Unit = while (logged < n) {
+        val c = clerks(rnd.nextInt(clerks.size))
+        val key = keys(rnd.nextInt(keys.size))
+        val dups = if (rnd.nextInt(5) == 0) 3 else 1
+        if (rnd.nextInt(3) == 0) c.put(key, s"p$logged;", dups)
+        else c.append(key, s"a$logged;", dups)
+        logged += dups
+        if (rnd.nextInt(6) == 0) { c.resendRandom(rnd); logged += 1 }
+      }
+      val reader = group.clerk(99L)
+      val probe = keys :+ "missing"
+
+      logUntil(1000)
+      val (small, smallJobs) = jobsIn(probe.map(k => k -> reader.get(k)).toMap)
+      assert(smallJobs == 0, s"$smallJobs Spark jobs for ${probe.size} gets over ${group.log.size} ops")
+      val (replayed, replayJobs) = jobsIn(
+        KVEngine.replay(group.log.toDS()).as[(String, String)].collect().toMap)
+      assert(replayJobs > 0, "the listener saw no job for the replay; the 0-job checks prove nothing")
+      assert(group.log.map(o => (o.clientId, o.reqId)).distinct.size < group.log.size,
+        "expected retries in the log")
+      probe.foreach(k => assert(small(k) == replayed.getOrElse(k, ""), s"get($k) at 1k ops"))
+
+      logUntil(100000)
+      val (large, largeJobs) = jobsIn(probe.map(k => k -> reader.get(k)).toMap)
+      assert(largeJobs == 0, s"$largeJobs Spark jobs for ${probe.size} gets over ${group.log.size} ops")
+      val folded = interpret(group.log)
+      probe.foreach(k => assert(large(k) == folded.getOrElse(k, ""), s"get($k) at 100k ops"))
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("tokenizer unicode parity: letters/numbers kept, underscore splits (SURVEY 7.4.3)") {
     val d = Seq((1L, "café 北京 naïve_test 42x", "en", "s", 1L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")

@@ -154,6 +154,40 @@ class SinkSpec extends SparkSpec {
     } finally query.stop()
   }
 
+  test("stateTableSink evaluates each micro-batch once: dedup state counts every pair once") {
+    implicit val sqlCtx = spark.sqlContext
+    val stateDir = Files.createTempDirectory("graft_once").toString
+    val ckpt = Files.createTempDirectory("graft_once_ckpt").toString
+    val rnd = new scala.util.Random(5L)
+    var seq = 0L
+    // a retry repeats its request verbatim: the fields follow from reqId
+    def op(reqId: Long): Op = {
+      seq += 1
+      Op(seq, 1 + reqId % 3, reqId, if (reqId % 4 == 0) "put" else "append",
+        s"k${reqId % 5}", s"v$reqId;")
+    }
+    // three micro-batches of ten new requests plus four retries each,
+    // from the same batch or an earlier one
+    val blocks = (0 until 3).map { b =>
+      (b * 10 until b * 10 + 10).map(r => op(r.toLong)) ++
+        (0 until 4).map(_ => op(rnd.nextInt(b * 10 + 10).toLong))
+    }
+    val stream = MemoryStream[Op]
+    val query = LiveKV.stateTableSink(
+      stream.toDS().dropDuplicates("clientId", "reqId"), stateDir, ckpt).start()
+    try {
+      blocks.indices.foreach { k =>
+        stream.addData(blocks(k))
+        query.processAllAvailable()
+        val pairs = blocks.take(k + 1).flatten.map(o => (o.clientId, o.reqId)).distinct.size
+        val rows = query.lastProgress.stateOperators.head.numRowsTotal
+        assert(rows == pairs, s"after batch $k the dedup state counts $rows rows for $pairs pairs")
+      }
+      val expected = graft.kv.KVEngine.replay(blocks.flatten.toDS()).as[(String, String)].collect().toMap
+      assert(LiveKV.readStateTable(spark, stateDir).as[(String, String)].collect().toMap == expected)
+    } finally query.stop()
+  }
+
   test("compactStateTable consolidates to ONE version and the stream resumes cleanly after") {
     implicit val sqlCtx = spark.sqlContext
     val stateDir = Files.createTempDirectory("graft_compact").toString

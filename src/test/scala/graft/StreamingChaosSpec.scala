@@ -51,6 +51,9 @@ class StreamingChaosSpec extends SparkSpec {
       val ckpt = Files.createTempDirectory(s"graft_chaos_ckpt_$seed").toString
       val blocks = chaosBlocks(seed, nBlocks = 8)
       val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+      // the sink caches each batch's writes; none may outlive its batch
+      val cachedBefore = org.apache.spark.graftbus.CachedBlocks.rddBlocks()
+      val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
 
       // 4 incarnations, each killed after a random prefix of blocks;
       // the last one sees everything. One randomly-chosen inter-
@@ -89,6 +92,11 @@ class StreamingChaosSpec extends SparkSpec {
         val got = LiveKV.readStateTable(spark, stateDir)
           .as[(String, String)].collect().toMap
         assert(got == expected, s"state diverged after kill at block $upTo (seed=$seed)")
+        val leaked = org.apache.spark.graftbus.CachedBlocks.rddBlocks() -- cachedBefore
+        assert(leaked.size == 0,
+          s"cached blocks left after kill at block $upTo, e.g. ${leaked.take(3)} (seed=$seed)")
+        assert(spark.sparkContext.getPersistentRDDs.keySet == persistedBefore,
+          s"persisted RDDs left after kill at block $upTo (seed=$seed)")
         if (progresses)
           assert(!fs.exists(partial), s"crashed partial attempt survived (seed=$seed)")
         if (upTo == compactAfter) {
