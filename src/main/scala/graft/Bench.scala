@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every declared query at
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line. A full warm-up pass at
   * sf0.001 first: JVM/JIT, codegen caches and parquet footers are
@@ -39,9 +37,9 @@ import org.apache.spark.sql.SparkSession
   * byte curve" was entirely an artifact of that pruned plan. The
   * re-baseline the old comment feared is paid once, here, with both
   * actions measured and committed (the bytes gate compares
-  * like-for-like from now on); SPARK_GRAFT_BENCH_ACTION=count keeps
-  * the old action available for A/Bs against pre-r14 artifacts, and
-  * every emitted JSON line now carries its `action`.
+  * like-for-like from now on); every emitted JSON line carries its
+  * `action` (always `full`), so BenchDiff can refuse a pre-r14
+  * count-action baseline.
   *
   * The artifact SELF-ADJUDICATES machine windows (round 16):
   * `queries_window_suspect` lists every query whose median is
@@ -85,6 +83,17 @@ object Bench {
       .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
   }
 
+  /** The two compile layers a sample pays: Janino compiles of
+    * whole-stage codegen classes (a miss in the session's codegen
+    * cache) and HotSpot JIT milliseconds. Both are JVM-wide counters;
+    * the bench runs one query at a time, so a delta is that query's. */
+  private final case class Compiles(codegen: Long, jitMs: Long) {
+    def -(o: Compiles): Compiles = Compiles(codegen - o.codegen, jitMs - o.jitMs)
+  }
+  private def compiles(): Compiles = Compiles(
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    java.lang.management.ManagementFactory.getCompilationMXBean.getTotalCompilationTime)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
@@ -93,20 +102,7 @@ object Bench {
     // 4-7× task "improvements"; the gate now carries cpus, and the
     // default must match the protocol, not fight it)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // 256, not cores: the over-provisioned production setting — AQE
-      // coalesces the excess at bench scale, and it is what fixes
-      // per-task sort memory at the 100× rung (see Tables.session)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "256"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // sorted bucketed scans (one file per bucket by construction) — see Tables.session
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session("graft-bench", cpus.toInt)
 
     // local-iteration filter: SPARK_GRAFT_ONLY=q1,q2 times just those
     // queries (unset — the driver's mode — times the full set)
@@ -115,11 +111,10 @@ object Bench {
     val metrics = graft.tools.TaskMetricsListener.install(spark.sparkContext)
     val canary = collection.mutable.ArrayBuffer(graft.tools.TaskMetricsListener.cpuCanarySec())
 
-    // the measured action: full-plan materialization by default (the
-    // pre-r14 count() action let Catalyst prune the plan under
-    // measurement — see TaskMetricsListener.materialize)
-    val action = graft.tools.TaskMetricsListener.benchAction
-    val actionName = sys.env.getOrElse("SPARK_GRAFT_BENCH_ACTION", "full")
+    // the measured action: full-plan materialization (a count() action
+    // lets Catalyst prune the plan under measurement — see
+    // TaskMetricsListener.materialize)
+    val action = graft.tools.TaskMetricsListener.materialize _
 
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
@@ -131,20 +126,23 @@ object Bench {
     // and marks the pass failed for the query — never reported as its
     // elapsed-time-to-exception.
     case class Sample(sec: Double, gcSec: Double,
-        bytes: graft.tools.TaskMetricsListener.Snap, pass: Int)
+        bytes: graft.tools.TaskMetricsListener.Snap, compiled: Compiles, pass: Int)
     val samples = collection.mutable.Map.empty[String, Vector[Sample]]
       .withDefaultValue(Vector.empty)
     for (pass <- 1 to Passes) {
       for ((name, fn) <- ordered) {
         val m0 = metrics.snapshot(spark.sparkContext)
         val gc0 = gcMillis()
+        val c0 = compiles()
         val t0 = System.nanoTime()
         val ok = try { action(fn(spark, sfDir)); true }
           catch { case scala.util.control.NonFatal(_) => false }
         val sec = (System.nanoTime() - t0) / 1e9
         val gcSec = (gcMillis() - gc0) / 1e3
+        val compiled = compiles() - c0
         val delta = metrics.snapshot(spark.sparkContext) - m0
-        samples(name) = samples(name) :+ Sample(if (ok) sec else -1.0, gcSec, delta, pass)
+        samples(name) = samples(name) :+
+          Sample(if (ok) sec else -1.0, gcSec, delta, compiled, pass)
       }
       canary += graft.tools.TaskMetricsListener.cpuCanarySec()
     }
@@ -161,14 +159,14 @@ object Bench {
     // are OMITTED from min/max/gc rather than overloading the -1
     // sentinel into columns where a valid measurement never existed.
     case class QStat(median: Double, min: Double, max: Double, gc: Double,
-        bytes: graft.tools.TaskMetricsListener.Snap,
+        bytes: graft.tools.TaskMetricsListener.Snap, compiled: Compiles,
         failedPasses: Int, allFailed: Boolean, windowSuspect: Boolean)
     val zeroSnap = graft.tools.TaskMetricsListener.Snap(0, 0, 0, 0, 0)
     val results = ordered.map { case (name, _) =>
       val s = samples(name)
       val good = s.filter(_.sec >= 0).sortBy(_.sec)
       val nFailed = s.size - good.size
-      if (good.isEmpty) name -> QStat(-1.0, 0, 0, 0, zeroSnap, nFailed,
+      if (good.isEmpty) name -> QStat(-1.0, 0, 0, 0, zeroSnap, Compiles(0, 0), nFailed,
         allFailed = true, windowSuspect = false)
       else {
         // byte metrics from the last SUCCESSFUL pass, not the
@@ -209,7 +207,7 @@ object Bench {
         val suspect = bytesFlat &&
           graft.tools.BenchDiff.windowSuspect(med.sec, good.head.sec, med.gcSec)
         name -> QStat(med.sec, good.head.sec, good.last.sec, med.gcSec,
-          lastOk.bytes, nFailed, allFailed = false, windowSuspect = suspect)
+          lastOk.bytes, lastOk.compiled, nFailed, allFailed = false, windowSuspect = suspect)
       }
     }
     def jmap(rows: Seq[(String, Double)]) =
@@ -219,7 +217,12 @@ object Bench {
     val qsMin = jmap(ok.map { case (k, st) => k -> st.min })
     val qsMax = jmap(ok.map { case (k, st) => k -> st.max })
     val qsGc = jmap(ok.map { case (k, st) => k -> st.gc })
-    val qsBytes = ok.map { case (k, st) => "\"" + k + "\":" + st.bytes.json }
+    // the per-query record: the listener's counters plus the compile
+    // layers, all from the same (last successful) sample
+    val qsBytes = ok.map { case (k, st) =>
+      "\"" + k + "\":" + st.bytes.json.dropRight(1) +
+        s""","codegen_compiles":${st.compiled.codegen},"jit_ms":${st.compiled.jitMs}}"""
+    }
       .mkString("{", ",", "}")
     val qsFailedPasses = results.collect { case (k, st) if st.failedPasses > 0 =>
       "\"" + k + "\":" + st.failedPasses
@@ -228,7 +231,7 @@ object Bench {
     val suspects = results.collect { case (k, st) if st.windowSuspect => "\"" + k + "\"" }
     val total = ok.map(_._2.median).sum
     val canaryJson = canary.map(c => f"$c%.3f").mkString("[", ",", "]")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","stat":"median_of_${Passes}_interleaved","action":"$actionName","cpus":"$cpus","canary_sec":$canaryJson,"queries":$qs,"queries_min":$qsMin,"queries_max":$qsMax,"queries_gc":$qsGc,"queries_bytes":$qsBytes,"queries_failed_passes":$qsFailedPasses,"queries_window_suspect":[${suspects.mkString(",")}],"failed":[${failed.mkString(",")}],"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","stat":"median_of_${Passes}_interleaved","action":"full","cpus":"$cpus","canary_sec":$canaryJson,"queries":$qs,"queries_min":$qsMin,"queries_max":$qsMax,"queries_gc":$qsGc,"queries_bytes":$qsBytes,"queries_failed_passes":$qsFailedPasses,"queries_window_suspect":[${suspects.mkString(",")}],"failed":[${failed.mkString(",")}],"sf":"$sfDir"}"""
     println(line)
     // sbt decorates stdout with [info] prefixes, which broke the
     // driver's JSON parse in round 1 — also write the line to a file.
@@ -261,7 +264,7 @@ object Bench {
     // full maps).
     val top20 = ok.sortBy(-_._2.median).take(20)
       .map { case (k, st) => k -> st.median }
-    val compact = s"""{"metric":"total","value":$total,"unit":"sec","stat":"median_of_${Passes}_interleaved","action":"$actionName","cpus":"$cpus","n_queries":${results.size},"canary_sec":$canaryJson,"n_window_suspect":${suspects.size},"failed":[${failed.mkString(",")}],"queries":${jmap(top20)},"queries_truncated":true,"queries_full":"BENCH_PARSED.json","sf":"$sfDir"}"""
+    val compact = s"""{"metric":"total","value":$total,"unit":"sec","stat":"median_of_${Passes}_interleaved","action":"full","cpus":"$cpus","n_queries":${results.size},"canary_sec":$canaryJson,"n_window_suspect":${suspects.size},"failed":[${failed.mkString(",")}],"queries":${jmap(top20)},"queries_truncated":true,"queries_full":"BENCH_PARSED.json","sf":"$sfDir"}"""
     spark.stop()
     println(compact)
   }

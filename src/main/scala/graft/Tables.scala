@@ -1,6 +1,12 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.collection.concurrent.TrieMap
+
+import graft.operators.LayoutStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated test tables (TESTDATA.md).
   *
@@ -22,7 +28,51 @@ object Tables {
     // driver-owned session isn't mutated on every table load.
     if (spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    // a missing table keeps Spark's own PATH_NOT_FOUND error
+    if (!Files.exists(Paths.get(path))) spark.read.parquet(path)
+    else spark.read.schema(schemaOf(spark, sfDir, name)).parquet(path)
+  }
+
+  /** Session confs that change the StructType parquet inference yields. */
+  private val SchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** A table's inferred schema, inferred once per file content.
+    * Inference runs a one-task Spark job to read the footer; a read
+    * with the schema given lists the files and runs no job. Only the
+    * StructType is cached, never the DataFrame: every load still builds
+    * a fresh relation with fresh expression ids, so self-joins (q21's
+    * two lineitem sides) stay unambiguous. */
+  private def schemaOf(spark: SparkSession, sfDir: String, name: String): StructType = {
+    val confs = SchemaConfs.map(k => spark.conf.getOption(k).getOrElse("")).mkString(",")
+    derive(sfDir, name, s"schema[$confs]")(spark.read.parquet(s"$sfDir/$name.parquet").schema)
+  }
+
+  /** Values derived from one table's content (its schema, shard_routed's
+    * last seq), one entry per (absolute path, kind) holding the
+    * [[LayoutStore.fingerprint]] it was computed under: size plus md5 of
+    * the first and last 4 KiB, which covers the parquet footer, so any
+    * rewrite of the table recomputes. */
+  private val derived = TrieMap.empty[(String, String), (String, Any)]
+
+  def derive[T](sfDir: String, name: String, kind: String)(compute: => T): T = {
+    val file = s"$name.parquet"
+    val key = (Paths.get(sfDir, file).toAbsolutePath.normalize.toString, kind)
+    // fingerprint BEFORE computing: a rewrite racing the computation
+    // then stores a newer value under the older fingerprint, which the
+    // next call misses and recomputes — never an old value under a new
+    // fingerprint
+    val fp = LayoutStore.fingerprint(sfDir, Seq(file))
+    derived.get(key) match {
+      case Some((`fp`, v)) => v.asInstanceOf[T]
+      case _ =>
+        val v = compute
+        derived.put(key, (fp, v))
+        v
+    }
   }
 
   /** Legacy form: events.ts as ns-since-epoch long (TIMESTAMP(NANOS)
@@ -88,8 +138,22 @@ object Tables {
       "lineitem", "events", "documents", "embeddings")
       .foreach(t => load(spark, sfDir, t).createOrReplaceTempView(t))
 
-  /** Session factory used by tests / local mains. Verify/Bench build
-    * their own (driver contract) — keep configs in sync with those.
+  /** Whole-stage codegen cache size: `spark.sql.codegen.cache.maxEntries`.
+    * Spark's default of 100 is smaller than the working set, so a
+    * process that runs the same queries again and again Janino-compiles
+    * (and then JITs) their classes on every round. One pass of all 199
+    * declared queries (graft.Verify at sf0.01) compiles 3,239 classes
+    * with an unbounded cache, 1,829 of them again on a second pass:
+    * code that differs on every call, which takes a slot without ever
+    * hitting. An LRU cache therefore needs one pass's distinct classes
+    * to keep the reusable ones; this is twice that. */
+  private val CodegenCacheEntries = 6500
+
+  /** The one session builder: tests, perfbench and every main (Verify,
+    * Bench, ScaleBench, CaptureQuery, AnnCapProbe) build here, each
+    * passing its own core count. The codegen cache is JVM-wide and a
+    * static conf, fixed by the first session the process builds, and it
+    * is sized to the working set ([[CodegenCacheEntries]]).
     */
   def session(appName: String, cores: Int = 4): SparkSession = {
     val spark = SparkSession.builder()
@@ -97,15 +161,15 @@ object Tables {
       // required for the worker-failure semantics tests
       .master(s"local[$cores, 2]")
       .appName(appName)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       // over-provisioned shuffle partitions are THE production
       // setting (round 14, SCALE_r13_shuf256): at the 100× rung a
       // 5 GB shuffle over cores-many partitions outgrows per-task
       // sort memory and spills (q21 wall 22.8 → 12.4 s at 256); at
       // small data AQE coalesces the excess post-shuffle, so the
       // only cost is map-side file handles — asymmetric in favor of
-      // over-provisioning. Same knob in Verify/Bench/ScaleBench;
-      // streaming state stores size it per query instead
-      // (StreamReplay.withShufflePartitions).
+      // over-provisioning. Streaming state stores size it per query
+      // instead (StreamReplay.withShufflePartitions).
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "256"))
       .config("spark.sql.adaptive.enabled", "true")
@@ -117,7 +181,7 @@ object Tables {
       // construction (BucketedTables.writeBucketed), so the listing
       // is bounded by bucket count and the payoff is a sort-free SMJ
       // on every co-located join — the reason the layout sortBys at
-      // all. Set in every session builder (Verify/Bench/ScaleBench).
+      // all.
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

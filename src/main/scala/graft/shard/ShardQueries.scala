@@ -18,7 +18,8 @@ object ShardQueries extends QueryPack {
 
   private def opsAndHistory(s: SparkSession, dir: String) = {
     val ops = OpLog.fromEvents(Tables.events(s, dir))
-    val maxSeq = ops.agg(max("seq")).head().getLong(0)
+    // the last seq depends only on the events file: one job per content
+    val maxSeq = Tables.derive(dir, "events", "maxSeq")(ops.agg(max("seq")).head().getLong(0))
     (ops, Reshard.steppedHistory(maxSeq, EpochLen))
   }
 

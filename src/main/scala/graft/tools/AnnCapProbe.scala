@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** ANN FAMILY-CAP probe (round 17, verdict #6): measures where
   * [[graft.pipeline.Similarity.adaptiveLshParams]]' family cap binds
   * and what happens to candidate volume past it — turning §21.3's
@@ -38,15 +36,7 @@ object AnnCapProbe {
     val scales = sys.env.getOrElse("SPARK_GRAFT_ANNCAP_SCALES", "300,800,1500")
       .split(",").map(_.trim.toInt).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "256"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.session("graft-anncap", cpus.toInt)
 
     def genEmb(out: java.nio.file.Path, k: Int): String = {
       val dir = out.resolve(s"x$k")

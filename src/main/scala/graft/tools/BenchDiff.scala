@@ -241,8 +241,8 @@ object BenchDiff {
     val (baseAct, curAct) = (readAction(basePath), readAction(curPath))
     if (baseAct != curAct) {
       println(s"[benchdiff] FAIL: action mismatch — baseline=$baseAct current=$curAct " +
-        "(byte profiles across actions are incomparable; re-baseline or rerun with " +
-        "SPARK_GRAFT_BENCH_ACTION matching the baseline)")
+        "(byte profiles across actions are incomparable; re-baseline with a " +
+        "full-action artifact)")
       sys.exit(2)
     }
     // core-count gate (round 16): task counts and core-sized shuffles

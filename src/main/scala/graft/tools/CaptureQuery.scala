@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Capture a declared query's RESULT ROWS at scale-ladder rungs —
   * the companion to [[ScaleBench]] for audits whose OUTPUT is the
   * evidence (ScaleBench records wall/byte curves; a recall audit's
@@ -23,16 +21,7 @@ object CaptureQuery {
     require(args.length >= 3, "usage: CaptureQuery <out.json> <query> <dir> [dir...]")
     val (outFile, query, dirs) = (args(0), args(1), args.drop(2).toSeq)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "256"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.session("graft-capture", cpus.toInt)
     val fn = graft.SparkEntry.queries(query)
     val metrics = TaskMetricsListener.install(spark.sparkContext)
 

@@ -236,23 +236,7 @@ object ScaleBench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // 256 — the over-provisioned production default shipped in every
-    // session builder since round 14 (SCALE_r13_shuf256: at the 100×
-    // rung a 5 GB shuffle over cores-many partitions outgrew per-task
-    // sort memory and spilled, q21 22.8 → 12.4 s at 256; AQE
-    // coalesces the excess at the small rungs, so over-provisioning
-    // costs nothing there)
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "256")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // sorted bucketed scans (one file per bucket by construction) — see Tables.session
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.session("graft-scalebench", cpus.toInt)
 
     val Scales = scales
     val dirs: Seq[(Int, String)] = Scales.map { s =>
@@ -268,8 +252,7 @@ object ScaleBench {
     // the measured action: full-plan materialization (round 14 — the
     // count() action measured Catalyst's count-pruned plans; see
     // TaskMetricsListener.materialize)
-    val action = TaskMetricsListener.benchAction
-    val actionName = sys.env.getOrElse("SPARK_GRAFT_BENCH_ACTION", "full")
+    val action = TaskMetricsListener.materialize _
     // one warm-up pass: JIT/codegen/parquet-footer costs are
     // per-process, not per-measurement
     sel.foreach { case (_, fn) =>
@@ -363,7 +346,7 @@ object ScaleBench {
       s""""$name":{"ladder":{$ladder},"alpha_cold":${j(slope(coldPts))},"alpha_warm":${j(slope(warmPts))},"alpha_shuffle_bytes":$aShuf,"alpha_shuffle_records":$aRec,"alpha_input_bytes":$aIn}"""
     }
     val canaryJson = canary.map(c => f"$c%.3f").mkString("[", ",", "]")
-    val line = s"""{"metric":"scale_curve","base":"$base","scales":[${Scales.mkString(",")}],"passes":$Passes,"cpus":$cpus,"action":"$actionName","canary_sec":$canaryJson,"protocol":"pass1=cold (pays build-once artifacts), warm=min(pass2,pass3); alpha = least-squares slope of log y vs log scale; bytes/records from the last pass; alpha_shuffle_bytes/alpha_shuffle_records/alpha_input_bytes are machine-window-immune; a byte alpha above a flat record alpha is shuffle-compression decay (bounded by raw row width), not work growth","queries":{${rows.mkString(",")}}}"""
+    val line = s"""{"metric":"scale_curve","base":"$base","scales":[${Scales.mkString(",")}],"passes":$Passes,"cpus":$cpus,"action":"full","canary_sec":$canaryJson,"protocol":"pass1=cold (pays build-once artifacts), warm=min(pass2,pass3); alpha = least-squares slope of log y vs log scale; bytes/records from the last pass; alpha_shuffle_bytes/alpha_shuffle_records/alpha_input_bytes are machine-window-immune; a byte alpha above a flat record alpha is shuffle-compression decay (bounded by raw row width), not work growth","queries":{${rows.mkString(",")}}}"""
     println(line)
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), line + "\n")
     spark.stop()

@@ -93,21 +93,6 @@ object TaskMetricsListener {
   def materialize(df: org.apache.spark.sql.DataFrame): Long =
     df.queryExecution.toRdd.count()
 
-  /** Bench action selected by SPARK_GRAFT_BENCH_ACTION: `full`
-    * (default — [[materialize]]) or `count` (the pre-r14 action, kept
-    * for byte-baseline A/Bs against pre-r14 artifacts). */
-  def benchAction: org.apache.spark.sql.DataFrame => Long =
-    sys.env.getOrElse("SPARK_GRAFT_BENCH_ACTION", "full") match {
-      case "count" => df => df.count()
-      case "full"  => materialize
-      // the raw env string is echoed into the artifact's `action`
-      // field and BenchDiff gates on it — a typo silently running
-      // the full action under a mislabeled name would poison the
-      // committed baseline; fail fast instead
-      case other => throw new IllegalArgumentException(
-        s"SPARK_GRAFT_BENCH_ACTION must be 'full' or 'count', got '$other'")
-    }
-
   /** Fixed spark-free CPU canary: a pinned xorshift64* integer loop
     * whose work is identical every call, timed in seconds. Indexes the
     * machine window's speed so cross-round wall-clock comparisons can
