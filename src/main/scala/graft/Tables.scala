@@ -169,7 +169,7 @@ object Tables {
       // small data AQE coalesces the excess post-shuffle, so the
       // only cost is map-side file handles — asymmetric in favor of
       // over-provisioning. Streaming state stores size it per query
-      // instead (StreamReplay.withShufflePartitions).
+      // instead (StreamReplay.drain).
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "256"))
       .config("spark.sql.adaptive.enabled", "true")

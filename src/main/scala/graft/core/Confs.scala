@@ -1,7 +1,7 @@
 package graft.core
 
 /** Scoped SQL-conf overrides — the "deliberate per-query knob" stance
-  * shared by streaming state layout (StreamReplay.StatePartitions)
+  * shared by streaming state layout (StreamReplay.drain's stateParts)
   * and driver-looped iterative builds (TextAnalysis.bpeLoop): the
   * session-wide shuffle-partition default is sized for the BIG
   * one-shot shuffles (256, over-provisioned, AQE-coalesced — see

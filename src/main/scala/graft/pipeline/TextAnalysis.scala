@@ -134,7 +134,7 @@ object TextAnalysis {
     // tiny round paid 8× the task-scheduling overhead (measured:
     // text_bpe_apply 2.4 → 4.2 s at sf0.1 when the default shipped).
     // Size the loop's shuffles to the core count instead — the
-    // StreamReplay.StatePartitions stance: iterative bounded state is
+    // StreamReplay.drain stateParts stance: iterative bounded state is
     // a deliberate per-query layout choice, not the big-shuffle
     // default's job. At real corpus scale vocab grows (Heaps) and a
     // deployment raises this with it.

@@ -1,9 +1,10 @@
 package graft.streaming
 
 import graft.kv.Op
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import java.nio.file.{Files, Path}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** Driver-visible STREAMING state replay — the query that puts the
   * whole Structured-Streaming KV plane (file source → exactly-once
@@ -26,11 +27,11 @@ import org.apache.spark.sql.streaming.Trigger
   *     partition-order-dependent; the in-stream dedup path stays
   *     chaos-tested in StreamingSpec where bit-parity with a SQL
   *     oracle is not the contract);
-  *  2. a file-source stream reads them with maxFilesPerTrigger=1 under
-  *     Trigger.AvailableNow — one micro-batch per bucket, in seq order
-  *     (mod-times 2 s apart; path order ties). The state fold is
-  *     genuinely INCREMENTAL across micro-batches: per-key GroupState
-  *     carries (value, maxSeq) from batch to batch;
+  *  2. a file-source stream reads them one file per trigger under
+  *     Trigger.AvailableNow ([[buckets]]) — one micro-batch per bucket,
+  *     in seq order (mod-times 2 s apart; path order ties). The state
+  *     fold is genuinely INCREMENTAL across micro-batches: per-key
+  *     GroupState carries (value, maxSeq) from batch to batch;
   *  3. the Update-mode memory sink holds one row per (key, batch that
   *     touched it); the final state per key is the row with the
   *     highest max_seq. That read is bounded by keys × batches — the
@@ -43,21 +44,14 @@ import org.apache.spark.sql.streaming.Trigger
   * playing Raft log order); the operator under test — the stateful
   * fold — is byte-identical.
   *
-  * HARNESS SHARE of the bench numbers (round-12 revision): fixture
-  * prep — one localCheckpoint of the projected input plus `nBatches`
-  * coalesce(1) single-file parquet writes with mod-time pinning — is
-  * now built ONCE per session per (sfDir, content-kind) and CACHED
-  * ([[cachedFixture]]), so across the bench's 3 interleaved passes
-  * only the first invocation of a family pays it (~1 s measured
-  * standalone at sf0.1); every later sample times the DRAIN — source
-  * admission, state-store commits, sink — which is the operator cost
-  * a production deployment (standing log, no per-query fixture) pays.
-  * Replays taking caller-supplied datasets (the op-log family) keep
-  * per-invocation fixtures: their input is not a pure function of
-  * sfDir. The residual floor is the drain itself: ~0.5 s of query
-  * start/stop plus per-micro-batch state commits — sized by
-  * [[StatePartitions]], remeasured r12: 8 → 2 took the
-  * interval-join drains from ~6.6 s to ~5.4 s at kilobytes of state.
+  * Every replay drains through one path ([[drain]], or [[run]] for the
+  * two replays whose sink is not a memory sink). Fixtures — bucket
+  * files that are a pure function of sfDir — are built once per
+  * session per (sfDir, content kind) and cached ([[cachedFixture]]), so
+  * a repeated call times only the drain: source admission, state-store
+  * commits and the sink, the cost a production deployment with a
+  * standing log pays. Replays over caller-supplied op logs keep
+  * per-invocation fixtures unless the caller vouches for a cache key.
   */
 object StreamReplay {
 
@@ -73,135 +67,189 @@ object StreamReplay {
 
   /** Symlink-safe recursive delete — the shared [[graft.core.Fs]]
     * helper (single definition; see its scaladoc for why NOFOLLOW). */
-  private def rmTree(p: java.nio.file.Path): Unit =
-    graft.core.Fs.rmTreeNoFollow(p)
+  private def rmTree(p: Path): Unit = graft.core.Fs.rmTreeNoFollow(p)
+
+  /** Bucket schemas, exactly as the fixtures write them. */
+  private val TevSchema = "ts_utc TIMESTAMP, event_type STRING, value DOUBLE"
+  private val SessionSchema = "user_id LONG, ts_utc TIMESTAMP"
+  private val OpSchema = Encoders.product[Op].schema.toDDL
 
   /** Write each slice as ONE parquet file under `inDir/b00i` with
     * strictly increasing modification times (2 s apart — far above fs
-    * timestamp granularity), so a maxFilesPerTrigger=1 file source
-    * admits them as micro-batches in exactly `slices` order. Callers
-    * pass slices of an already-checkpointed frame: each write is a
-    * coalesce(1) single-task job and must not re-run upstream work. */
-  private def writeBuckets(slices: Seq[DataFrame], inDir: java.nio.file.Path): Unit = {
+    * timestamp granularity), so [[buckets]] admits them as
+    * micro-batches in exactly `slices` order. Callers pass slices of an
+    * already-checkpointed frame: each write is a coalesce(1)
+    * single-task job and must not re-run upstream work. */
+  private[graft] def writeBuckets(slices: Seq[DataFrame], inDir: Path): Unit = {
     val t0 = System.currentTimeMillis()
     slices.zipWithIndex.foreach { case (df, b) =>
       val dir = inDir.resolve(f"b$b%03d")
       df.coalesce(1).write.mode("overwrite").parquet(dir.toString)
-      val ls = java.nio.file.Files.list(dir)
+      val ls = Files.list(dir)
       try ls.forEach { p =>
         if (!p.getFileName.toString.startsWith("_"))
-          java.nio.file.Files.setLastModifiedTime(p,
+          Files.setLastModifiedTime(p,
             java.nio.file.attribute.FileTime.fromMillis(t0 + b * 2000L))
       } finally ls.close()
     }
   }
 
-  /** Run `body` (which must both BUILD and DRAIN a streaming query)
-    * with `spark.sql.shuffle.partitions` = n, restoring the session
-    * value after. Stateful streaming operators take their STATE-STORE
-    * partition count from this conf at query planning, and every
-    * micro-batch pays a fixed per-partition state checkpoint cost —
-    * so the partition count must be sized to the STATE VOLUME, not to
-    * the session's batch-compute parallelism (a stream-stream join
-    * carries 4 state stores: at 32 partitions × 5 micro-batches that
-    * is 640 state commits for what is here kilobytes of state —
-    * measured 35 s of a 36 s query). At production state volumes the
-    * same knob goes UP instead; the point is that it is a deliberate
-    * state-layout choice, set per query. */
-  private def withShufflePartitions[T](
-      spark: org.apache.spark.sql.SparkSession, n: Int)(body: => T): T =
-    graft.core.Confs.withShufflePartitions(spark, n)(body)
+  /** The file-source stream over the buckets [[writeBuckets]] wrote
+    * under `inDir`: one file per trigger, so each bucket is one
+    * micro-batch, in bucket order. `schema` is the schema the fixture
+    * wrote — declaring it spares a parquet schema-inference job. */
+  private[graft] def buckets(spark: SparkSession, inDir: Path, schema: String): DataFrame =
+    spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(s"$inDir/b*")
+
+  /** The start/await/cleanup core every drain shares: `writer(root)`,
+    * over a fresh scratch root, starts under Trigger.AvailableNow with
+    * its checkpoint in `root/ck` and is awaited to the end of its
+    * source; then `read(root)` localizes the result. With `stateParts`
+    * the start and the wait run under that `spark.sql.shuffle.partitions`
+    * (see [[drain]]); without, under the session's. The query is
+    * stopped and the root deleted however the body exits. */
+  private def run[T](spark: SparkSession, stateParts: Option[Int])(
+      writer: Path => DataStreamWriter[_])(read: Path => T): T = {
+    val root = Files.createTempDirectory("graft_stream_")
+    try {
+      def toEnd(): Unit = {
+        val q = writer(root).option("checkpointLocation", root.resolve("ck").toString)
+          .trigger(Trigger.AvailableNow()).start()
+        try q.awaitTermination() finally q.stop()
+      }
+      stateParts match {
+        case Some(n) => graft.core.Confs.withShufflePartitions(spark, n)(toEnd())
+        case None => toEnd()
+      }
+      read(root)
+    } finally rmTree(root)
+  }
+
+  /** Collect a bounded result into a local frame — it must outlive
+    * the sink and scratch root it was read from. */
+  private def local(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+
+  /** Drain `query` to the end of its source into a memory sink in
+    * `outputMode`, apply `finish` to the sink table and return the
+    * collected result as a local frame. The sink's view and the
+    * scratch root are dropped however the drain ends, so a failed
+    * drain holds no sink rows in driver memory.
+    *
+    * `stateParts` is the query's state layout: a stateful operator's
+    * state-store partition count is fixed at query start from
+    * `spark.sql.shuffle.partitions`, and every micro-batch commits
+    * every partition of every store, touched or not. So the count is
+    * sized to the STATE VOLUME, not to the session's batch-compute
+    * parallelism (a stream-stream join carries 4 state stores: at 32
+    * partitions × 5 micro-batches that is 640 state commits for
+    * kilobytes of state). At production state volumes it goes up
+    * instead; either way it is a deliberate per-query choice. */
+  private[graft] def drain(query: Dataset[_], outputMode: String, stateParts: Int)(
+      finish: DataFrame => DataFrame): DataFrame = {
+    val spark = query.sparkSession
+    val name = s"stream_${runCounter.incrementAndGet()}"
+    try run(spark, Some(stateParts))(_ =>
+        query.writeStream.format("memory").queryName(name).outputMode(outputMode))(
+      _ => local(finish(spark.table(name))))
+    finally spark.catalog.dropTempView(name)
+  }
 
   /** State-store partition count for the replay queries' stateful
     * operators — kilobytes of state at any test sf (≤ 50 KV keys /
-    * bounded open sessions / a ~1.5 h join window). Lowered 8 → 2 in
-    * round 12 after remeasuring the per-partition commit tax (each
-    * micro-batch commits EVERY state partition of every store even
-    * when untouched; a stream-stream join carries 4 stores, so 5
-    * batches × 4 stores × 8 partitions = 160 commits vs 40 at 2):
-    * interval-join drains went ~6.6 s → ~5.4 s, results unchanged
-    * (state is hash-partitioned; 2 keeps the multi-partition path
-    * exercised). Production sizes this UP to state volume / executor
-    * count — the point stays: it is a deliberate per-query knob. */
+    * bounded open sessions / a ~1.5 h join window). 2, not 1, keeps
+    * the multi-partition path exercised (state is hash-partitioned, so
+    * results do not depend on it). */
   private val StatePartitions = 2
 
-  /** SCALE-AWARE state-partition count for the event-corpus replays
-    * (round 15 — r14's x100 rung: stream_sessions' shuffle records
-    * stayed exactly linear to 100× while its WALL segment bent to
-    * 1.31, because the pinned 2-partition state layout caps each
-    * micro-batch's state work at 2 tasks; at 10M events the knob
-    * saturates). Derived from the corpus's events.parquet byte size —
-    * a filesystem stat, no action: ~1 state partition per 8 MB of
-    * event data, floored at [[StatePartitions]] (so every gate sf and
-    * the bench's sf0.1 keep today's measured 2-partition layout and
-    * its per-partition commit tax — sf0.1 events are 2 MB) and capped
-    * at 2 × the cluster's default parallelism (round 16 — the r15
-    * spelling capped at the literal 64, which is 2×cores ON THIS
-    * box but encoded local[32] into what reads as "the" formula: a
-    * 1000-executor cluster replaying 100 TB of events would have been
-    * throttled to 64 state tasks. The commit tax that motivates a cap
-    * at all is per partition PER STORE per batch — a stream-stream
-    * join carries 4 stores — so the cap tracks how many tasks can
-    * actually commit concurrently, not a constant).
-    * SPARK_GRAFT_STATE_PARTITIONS overrides — production sizes this to
-    * state volume / executor count. The op-log replays keep the flat
-    * constant: their state is ≤ 50 KV keys at any sf, bounded by
-    * construction. */
+  /** SCALE-AWARE state-partition count for the event-corpus replays,
+    * derived from the corpus's events.parquet byte size — a filesystem
+    * stat, no action (see [[derivedStatePartitions]]). A pinned count
+    * caps each micro-batch's state work at that many tasks however
+    * large the corpus grows. The op-log replays keep the flat
+    * [[StatePartitions]]: their state is ≤ 50 KV keys at any sf. */
   private def statePartitionsFor(sfDir: String): Int = {
-    val overridden = sys.env.get("SPARK_GRAFT_STATE_PARTITIONS").map { s =>
-      s.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
-        s"SPARK_GRAFT_STATE_PARTITIONS must be a positive integer, got '$s'"))
-    }
-    overridden.getOrElse {
-      val dir = java.nio.file.Paths.get(sfDir, "events.parquet")
-      // NonFatal, not just IOException: the lazy walk stream surfaces
-      // a file vanishing mid-walk as UncheckedIOException (a
-      // RuntimeException) — any stat failure means "size unknown",
-      // and the floor is the safe layout (r15 advice)
-      val bytes =
-        try {
-          val s = java.nio.file.Files.walk(dir)
-          try s.filter(p => java.nio.file.Files.isRegularFile(p))
-            .mapToLong(p => java.nio.file.Files.size(p)).sum()
-          finally s.close()
-        } catch { case scala.util.control.NonFatal(_) => 0L }
-      val parallelism = org.apache.spark.sql.SparkSession.active
-        .sparkContext.defaultParallelism
-      derivedStatePartitions(bytes, parallelism)
-    }
+    val dir = java.nio.file.Paths.get(sfDir, "events.parquet")
+    // NonFatal, not just IOException: the lazy walk stream surfaces
+    // a file vanishing mid-walk as UncheckedIOException (a
+    // RuntimeException) — any stat failure means "size unknown",
+    // and the floor is the safe layout
+    val bytes =
+      try {
+        val s = Files.walk(dir)
+        try s.filter(p => Files.isRegularFile(p)).mapToLong(p => Files.size(p)).sum()
+        finally s.close()
+      } catch { case scala.util.control.NonFatal(_) => 0L }
+    derivedStatePartitions(bytes, SparkSession.active.sparkContext.defaultParallelism)
   }
 
   /** The pure derivation behind [[statePartitionsFor]], spec-pinned:
     * ~1 state partition per 8 MB of event bytes, floored at
-    * [[StatePartitions]], capped at 2 × `parallelism`. On local[32]
-    * the cap is 64 — byte-identical to the r15 artifacts at every
-    * measured rung (x100 derives 25, below either cap). */
+    * [[StatePartitions]] (every gate sf and the sf0.1 bench — 2 MB of
+    * events — keep the 2-partition layout), capped at 2 × `parallelism`:
+    * the commit tax is per partition PER STORE per batch, so the cap
+    * tracks how many tasks can commit concurrently, not a constant. */
   private[graft] def derivedStatePartitions(bytes: Long, parallelism: Int): Int =
     math.max(StatePartitions,
       math.min(2L * math.max(1, parallelism), bytes / (8L << 20)).toInt)
 
-  /** Checkpoint the prepared events frame `e0` (projected — and
-    * filtered, where the replay has a row filter: filters belong
-    * BEFORE the checkpoint so the checkpoint holds only needed rows —
-    * which must carry a `tsu` µs column), compute the [lo, hi] µs
-    * range, and return (checkpointed frame, lo, hi, bucket-index
-    * column for `nBatches` equal time slices). Shared fixture step for
-    * every event-time replay. */
-  private def timeSliced(e0: DataFrame, nBatches: Int): (DataFrame, Long, Long, Column) = {
-    val e = e0.localCheckpoint(true)
-    val r = e.agg(min("tsu"), max("tsu")).head()
-    val (lo, hi) = (r.getLong(0), r.getLong(1))
-    val width = math.max((hi - lo) / nBatches + 1, 1L)
-    val bucket = least(((col("tsu") - lo).cast("decimal(25,0)") / width).cast("long"),
-      lit(nBatches - 1L))
-    (e, lo, hi, bucket)
-  }
+  /** A cached event-corpus fixture: `project` the events table (the
+    * projection must carry a `tsu` µs column; row filters belong here,
+    * before the checkpoint, so it holds only needed rows), checkpoint
+    * it, cut its [lo, hi] µs range into `nSlices` equal time slices,
+    * and write the frames `frames(e, lo, hi, slice-index column)`
+    * makes as buckets. */
+  private def eventFixture(spark: SparkSession, sfDir: String, kind: String, nSlices: Int)(
+      project: DataFrame => DataFrame)(
+      frames: (DataFrame, Long, Long, Column) => Seq[DataFrame]): Path =
+    cachedFixture(sfDir, kind) { inDir =>
+      val e = project(graft.Tables.events(spark, sfDir)).localCheckpoint(true)
+      val r = e.agg(min("tsu"), max("tsu")).head()
+      val (lo, hi) = (r.getLong(0), r.getLong(1))
+      val width = math.max((hi - lo) / nSlices + 1, 1L)
+      val bucket = least(((col("tsu") - lo).cast("decimal(25,0)") / width).cast("long"),
+        lit(nSlices - 1L))
+      writeBuckets(frames(e, lo, hi, bucket), inDir)
+      graft.pipeline.Dedup.freeCheckpoint(e)
+    }
+
+  /** The time-ordered buckets: slice 0 first, `cols` projected. */
+  private def inOrder(e: DataFrame, bucket: Column, n: Int, cols: String*): Seq[DataFrame] =
+    (0 until n).map(b => e.filter(bucket === b).select(cols.map(col): _*))
+
+  private def tev(ev: DataFrame): DataFrame =
+    ev.select(graft.Tables.eventTime(ev).as("ts_utc"), col("event_type"),
+      col("value"), graft.Tables.eventMicros(ev).as("tsu"))
+
+  private def sessionEvents(ev: DataFrame): DataFrame =
+    ev.select(col("user_id"), graft.Tables.eventTime(ev).as("ts_utc"),
+      graft.Tables.eventMicros(ev).as("tsu"))
+
+  private def clicksAndPurchases(ev: DataFrame): DataFrame =
+    ev.select(col("event_id"), col("user_id"), col("event_type"),
+      graft.Tables.eventTime(ev).as("ts_utc"), graft.Tables.eventMicros(ev).as("tsu"))
+      .filter(col("event_type").isin("click", "purchase"))
+
+  /** The 1-hour × event_type rollup of a (ts_utc, event_type, value)
+    * stream — the batch ev_hourly shape. */
+  private def hourly(src: DataFrame): DataFrame = src
+    .groupBy(window(col("ts_utc"), "1 hour"), col("event_type"))
+    .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("total"))
+    .select(col("window.start").as("w_start"), col("event_type"), col("n"), col("total"))
+
+  /** (ts_utc, event_type, value) time-ordered buckets — shared by
+    * [[windowedReplay]] and [[ivmReplay]] (identical projection and
+    * slicing) and across bench passes. */
+  private def tevFixture(spark: SparkSession, sfDir: String, nBatches: Int): Path =
+    eventFixture(spark, sfDir, s"tev-$nBatches", nBatches)(tev) { (e, _, _, bucket) =>
+      inOrder(e, bucket, nBatches, "ts_utc", "event_type", "value")
+    }
 
   /** Driver-visible STREAMING windowed aggregation — the second
     * streaming plane (stateful event-time aggregation, vs
     * [[stateReplay]]'s mapGroupsWithState) under the oracle gate: the
     * events table is bucketed into `nBatches` TIME-ORDERED files,
-    * read as a file-source stream with maxFilesPerTrigger=1 (so the
+    * read as a file-source stream one file per trigger (so the
     * Complete-mode aggregation genuinely ACCUMULATES state across
     * micro-batches — a single-batch run would never exercise the
     * cross-batch state merge), rolled up by 1-hour tumbling window ×
@@ -213,50 +261,9 @@ object StreamReplay {
     * grid, never the event count. In production the sink is a
     * Delta/parquet table in Update mode with a watermark; the
     * aggregation operator under test is the same. */
-  /** (ts_utc, event_type, value) time-ordered buckets — shared by
-    * [[windowedReplay]] and [[ivmReplay]] (identical projection and
-    * slicing) and across bench passes. */
-  private def tevFixture(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, nBatches: Int): java.nio.file.Path =
-    cachedFixture(sfDir, s"tev-$nBatches") { inDir =>
-      val ev = graft.Tables.events(spark, sfDir)
-      val (e, _, _, bucket) = timeSliced(
-        ev.select(graft.Tables.eventTime(ev).as("ts_utc"), col("event_type"),
-          col("value"), graft.Tables.eventMicros(ev).as("tsu")), nBatches)
-      writeBuckets((0 until nBatches).map(b =>
-        e.filter(bucket === b).select("ts_utc", "event_type", "value")), inDir)
-      graft.pipeline.Dedup.freeCheckpoint(e)
-    }
-
-  def windowedReplay(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      nBatches: Int = 4): DataFrame = {
-    val inDir = tevFixture(spark, sfDir, nBatches)
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_hourly_")
-    try {
-      val src = spark.readStream
-        .schema("ts_utc TIMESTAMP, event_type STRING, value DOUBLE")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$inDir/b*")
-      val agg = src
-        .groupBy(window(col("ts_utc"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("total"))
-        .select(col("window.start").as("w_start"), col("event_type"),
-          col("n"), col("total"))
-      val name = s"stream_hourly_${runCounter.incrementAndGet()}"
-      withShufflePartitions(spark, statePartitionsFor(sfDir)) {
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", root.resolve("ck").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      val schema = spark.table(name).schema
-      val rows = spark.table(name).collect() // hours × types — bounded
-      spark.catalog.dropTempView(name)
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    } finally rmTree(root)
-  }
+  def windowedReplay(spark: SparkSession, sfDir: String, nBatches: Int = 4): DataFrame =
+    drain(hourly(buckets(spark, tevFixture(spark, sfDir, nBatches), TevSchema)),
+      "complete", statePartitionsFor(sfDir))(identity)
 
   /** The PRODUCTION ingest loop under the gate — streaming × IVM: the
     * events stream drains through foreachBatch, and every micro-batch
@@ -270,7 +277,9 @@ object StreamReplay {
     * the one-shot rollup — no streaming semantics to model; what the
     * gate buys is the end-to-end loop: file source → foreachBatch →
     * swap → serve from the on-disk table (read back AFTER the stream
-    * stops, from disk, not from any in-memory sink).
+    * stops, from disk, not from any in-memory sink). It runs under the
+    * session's shuffle partitions: there is no state store to size,
+    * and the partial's double sums must not change partition count.
     *
     * Retry caveat (the monoid's one gap): foreachBatch re-runs a
     * failed batch, and count/sum partials are NOT idempotent — a
@@ -280,36 +289,20 @@ object StreamReplay {
     * and skips an already-folded id; the AvailableNow happy path the
     * gate runs has no retries.
     */
-  def ivmReplay(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      nBatches: Int = 4): DataFrame = {
+  def ivmReplay(spark: SparkSession, sfDir: String, nBatches: Int = 4): DataFrame = {
     val inDir = tevFixture(spark, sfDir, nBatches)
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_ivm_")
-    val standing = root.resolve("standing").toString
-    try {
-      val src = spark.readStream
-        .schema("ts_utc TIMESTAMP, event_type STRING, value DOUBLE")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$inDir/b*")
-      val q = src.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          // IncrementalAgg.partial derives day from the batch's ts
-          // column; present the batch under the events-table shape
-          graft.operators.StandingTable.updateAggPartial(standing,
-            batch.withColumnRenamed("ts_utc", "ts"))
-          ()
-        }
-        .option("checkpointLocation", root.resolve("ck").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    def standing(root: Path) = root.resolve("standing").toString
+    run(spark, None)(root => buckets(spark, inDir, TevSchema).writeStream
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
+        // IncrementalAgg.partial derives day from the batch's ts
+        // column; present the batch under the events-table shape
+        graft.operators.StandingTable.updateAggPartial(standing(root),
+          batch.withColumnRenamed("ts_utc", "ts"))
+        ()
+      })(
       // serve from the standing DISK table (groups-sized read)
-      val served = graft.operators.IncrementalAgg.finalizeView(
-          spark.read.parquet(standing))
-        .orderBy("day", "event_type")
-      val schema = served.schema
-      val rows = served.collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    } finally rmTree(root)
+      root => local(graft.operators.IncrementalAgg.finalizeView(
+        spark.read.parquet(standing(root))).orderBy("day", "event_type")))
   }
 
   /** SKETCH-IN-STATE under the gate — streaming × HLL: per-hour
@@ -332,67 +325,41 @@ object StreamReplay {
     * bounded hours-sized drain. Oracle: the one-shot per-hour
     * register build (max is order- and batching-independent).
     */
-  def hllReplay(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      nBatches: Int = 4): DataFrame = {
+  def hllReplay(spark: SparkSession, sfDir: String, nBatches: Int = 4): DataFrame = {
     import spark.implicits._
-    val inDir = cachedFixture(sfDir, s"hll-$nBatches") { fixDir =>
-      val ev = graft.Tables.events(spark, sfDir)
-      val hourly = ev.select(
+    val inDir = eventFixture(spark, sfDir, s"hll-$nBatches", nBatches)(ev => ev.select(
         (graft.Tables.eventMicros(ev).cast("decimal(25,0)") / 3600000000L).cast("long").as("hour"),
-        col("user_id"), graft.Tables.eventMicros(ev).as("tsu"))
-      val (e, _, _, bucket) = timeSliced(hourly, nBatches)
-      writeBuckets((0 until nBatches).map { b =>
-        graft.operators.HllSketch.hashed(e.filter(bucket === b), "hour", "user_id")
-      }, fixDir)
-      graft.pipeline.Dedup.freeCheckpoint(e)
+        col("user_id"), graft.Tables.eventMicros(ev).as("tsu"))) { (e, _, _, bucket) =>
+      (0 until nBatches).map(b =>
+        graft.operators.HllSketch.hashed(e.filter(bucket === b), "hour", "user_id"))
     }
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_hll_")
-    try {
-      val src = spark.readStream
-        .schema("hour LONG, bucket LONG, rank LONG")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$inDir/b*")
-      val name = s"stream_hll_${runCounter.incrementAndGet()}"
-      withShufflePartitions(spark, statePartitionsFor(sfDir)) {
-        val updates = src.as[(Long, Long, Long)]
-          .groupByKey(_._1)
-          .mapGroupsWithState[HllState, HllUpdate](
-            org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-            (hour, rows, state) =>
-              val st = state.getOption.getOrElse(
-                HllState(Array.fill(graft.operators.HllSketch.M)(0), 0L))
-              var seen = st.seen
-              rows.foreach { case (_, b, r) =>
-                if (r > st.regs(b.toInt)) st.regs(b.toInt) = r.toInt
-                seen += 1
-              }
-              val next = HllState(st.regs, seen)
-              state.update(next)
-              HllUpdate(hour,
-                next.regs.count(_ == 0).toLong,
-                next.regs.map(graft.operators.HllSketch.sTerm).sum,
-                seen)
-          }
-        val q = updates.toDF
-          .writeStream.format("memory").queryName(name)
-          .outputMode("update")
-          .option("checkpointLocation", root.resolve("ck").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+    val updates = buckets(spark, inDir, "hour LONG, bucket LONG, rank LONG")
+      .as[(Long, Long, Long)]
+      .groupByKey(_._1)
+      .mapGroupsWithState[HllState, HllUpdate](
+        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) { (hour, rows, state) =>
+        val st = state.getOption.getOrElse(
+          HllState(Array.fill(graft.operators.HllSketch.M)(0), 0L))
+        var seen = st.seen
+        rows.foreach { case (_, b, r) =>
+          if (r > st.regs(b.toInt)) st.regs(b.toInt) = r.toInt
+          seen += 1
+        }
+        val next = HllState(st.regs, seen)
+        state.update(next)
+        HllUpdate(hour,
+          next.regs.count(_ == 0).toLong,
+          next.regs.map(graft.operators.HllSketch.sTerm).sum,
+          seen)
       }
-      // bounded drain: hours × batches update rows; newest fold wins
-      val finalRows = spark.table(name)
+    // bounded drain: hours × batches update rows; newest fold wins
+    drain(updates, "update", statePartitionsFor(sfDir)) { sink =>
+      graft.operators.HllSketch.estimateFromCounts(sink
         .groupBy("hour")
         .agg(max_by(struct(col("vZero"), col("sScaled")), col("nSeen")).as("s"))
-        .select(col("hour"), col("s.vZero").as("v_zero"), col("s.sScaled").as("s_scaled"))
-      val served = graft.operators.HllSketch.estimateFromCounts(finalRows)
+        .select(col("hour"), col("s.vZero").as("v_zero"), col("s.sScaled").as("s_scaled")))
         .orderBy("hour")
-      val schema = served.schema
-      val rows = served.collect()
-      spark.catalog.dropTempView(name)
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    } finally rmTree(root)
+    }
   }
 
   /** LATE / OUT-OF-ORDER data under the streaming gate — the one
@@ -422,7 +389,7 @@ object StreamReplay {
     *    dropped. The filter itself is strict — dropped iff
     *    `ts_ms < wm_ms`; a row AT the watermark survives — and here
     *    the margin is vacuously wide (slice-3a's max is half a slice
-    *    above all of slice 2, enforced by the require below);
+    *    above all of slice 2, enforced by [[lateSliceFilters]]);
     *  - window EMISSION in Append mode is NON-strict: a window is
     *    emitted iff `end_ms ≤ wm_ms`, with the terminal watermark
     *    `wm = floor(hi_µs/1000) − 3 600 000 ms` (watermarks are
@@ -438,44 +405,13 @@ object StreamReplay {
     * exists for; StreamingSpec pins that at least one emitted window
     * lost rows. Bounded final read (emitted windows grid), as
     * [[windowedReplay]]. */
-  def windowedLateReplay(spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame = {
-    val inDir = cachedFixture(sfDir, "tev-late") { fixDir =>
-      val nSlices = 4
-      val ev = graft.Tables.events(spark, sfDir)
-      val (e, lo, hi, bucket) = timeSliced(
-        ev.select(graft.Tables.eventTime(ev).as("ts_utc"), col("event_type"),
-          col("value"), graft.Tables.eventMicros(ev).as("tsu")), nSlices)
-      val slices = lateSliceFilters(e, lo, hi, bucket, nSlices)
-      writeBuckets(slices.map(s =>
-        e.filter(s).select("ts_utc", "event_type", "value")), fixDir)
-      graft.pipeline.Dedup.freeCheckpoint(e)
+  def windowedLateReplay(spark: SparkSession, sfDir: String): DataFrame = {
+    val inDir = eventFixture(spark, sfDir, "tev-late", 4)(tev) { (e, lo, hi, bucket) =>
+      lateSliceFilters(e, lo, hi, bucket, 4).map(s =>
+        e.filter(s).select("ts_utc", "event_type", "value"))
     }
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_late_")
-    try {
-      val src = spark.readStream
-        .schema("ts_utc TIMESTAMP, event_type STRING, value DOUBLE")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$inDir/b*")
-      val agg = src
-        .withWatermark("ts_utc", "1 hour")
-        .groupBy(window(col("ts_utc"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("total"))
-        .select(col("window.start").as("w_start"), col("event_type"),
-          col("n"), col("total"))
-      val name = s"stream_hourly_late_${runCounter.incrementAndGet()}"
-      withShufflePartitions(spark, statePartitionsFor(sfDir)) {
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", root.resolve("ck").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      val schema = spark.table(name).schema
-      val rows = spark.table(name).collect() // emitted windows grid — bounded
-      spark.catalog.dropTempView(name)
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    } finally rmTree(root)
+    drain(hourly(buckets(spark, inDir, TevSchema).withWatermark("ts_utc", "1 hour")),
+      "append", statePartitionsFor(sfDir))(identity)
   }
 
   /** Arrival-order filters for the late replays — slices 0, 1, then
@@ -504,6 +440,15 @@ object StreamReplay {
     slices
   }
 
+  /** Drain the (user_id, ts_utc) buckets under `inDir` through
+    * [[LiveKV.sessionize]] — shared by the ordered and late session
+    * replays. The sink is bounded by the closed-session count. */
+  private def drainSessions(spark: SparkSession, inDir: Path, sfDir: String): DataFrame = {
+    import spark.implicits._
+    drain(LiveKV.sessionize(buckets(spark, inDir, SessionSchema).as[LiveKV.SessionEvent]),
+      "append", statePartitionsFor(sfDir))(identity)
+  }
+
   /** LATE data through the SESSIONIZATION family — the same
     * out-of-order delivery as [[windowedLateReplay]] (slices 0, 1, 3a,
     * 3b, then 2 provably late) driven through
@@ -522,41 +467,11 @@ object StreamReplay {
     * timeout between batches; emitted either way). Oracle: the
     * stream_sessions SQL over the slice-filtered event set, watermark
     * from ALL events. */
-  def sessionLateReplay(spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val inDir = cachedFixture(sfDir, "sess-late") { fixDir =>
-      val nSlices = 4
-      val ev = graft.Tables.events(spark, sfDir)
-      val (e, lo, hi, bucket) = timeSliced(
-        ev.select(col("user_id"), graft.Tables.eventTime(ev).as("ts_utc"),
-          graft.Tables.eventMicros(ev).as("tsu")), nSlices)
-      val slices = lateSliceFilters(e, lo, hi, bucket, nSlices)
-      writeBuckets(slices.map(s => e.filter(s).select("user_id", "ts_utc")), fixDir)
-      graft.pipeline.Dedup.freeCheckpoint(e)
-    }
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_sess_late_")
-    try {
-      val name = s"stream_sessions_late_${runCounter.incrementAndGet()}"
-      withShufflePartitions(spark, statePartitionsFor(sfDir)) {
-        val src = spark.readStream
-          .schema("user_id LONG, ts_utc TIMESTAMP")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(s"$inDir/b*")
-        val q = LiveKV.sessionize(src.as[LiveKV.SessionEvent])
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", root.resolve("ck").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      val rows = spark.table(name).collect() // closed sessions — bounded
-      spark.catalog.dropTempView(name)
-      rows.toSeq
-        .map(r2 => (r2.getLong(0), r2.getLong(1), r2.getLong(2), r2.getLong(3)))
-        .toDF("user_id", "start_ms", "end_ms", "n_events")
-    } finally rmTree(root)
-  }
+  def sessionLateReplay(spark: SparkSession, sfDir: String): DataFrame =
+    drainSessions(spark, eventFixture(spark, sfDir, "sess-late", 4)(sessionEvents) {
+      (e, lo, hi, bucket) =>
+        lateSliceFilters(e, lo, hi, bucket, 4).map(s => e.filter(s).select("user_id", "ts_utc"))
+    }, sfDir)
 
   /** Driver-visible STREAMING sessionization — flatMapGroupsWithState
     * with EVENT-TIME TIMEOUT under the oracle gate (the third stateful
@@ -585,41 +500,10 @@ object StreamReplay {
     * The memory sink + final read are bounded by the CLOSED-session
     * count (≪ event count; production writes a parquet sink — the
     * operator under test is identical). */
-  def sessionReplay(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      nBatches: Int = 4): DataFrame = {
-    import spark.implicits._
-    val inDir = cachedFixture(sfDir, s"sess-$nBatches") { fixDir =>
-      val ev = graft.Tables.events(spark, sfDir)
-      val (e, _, _, bucket) = timeSliced(
-        ev.select(col("user_id"), graft.Tables.eventTime(ev).as("ts_utc"),
-          graft.Tables.eventMicros(ev).as("tsu")), nBatches)
-      writeBuckets((0 until nBatches).map(b =>
-        e.filter(bucket === b).select("user_id", "ts_utc")), fixDir)
-      graft.pipeline.Dedup.freeCheckpoint(e)
-    }
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_sessions_")
-    try {
-      val name = s"stream_sessions_${runCounter.incrementAndGet()}"
-      withShufflePartitions(spark, statePartitionsFor(sfDir)) {
-        val src = spark.readStream
-          .schema("user_id LONG, ts_utc TIMESTAMP")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(s"$inDir/b*")
-        val q = LiveKV.sessionize(src.as[LiveKV.SessionEvent])
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", root.resolve("ck").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      val rows = spark.table(name).collect() // closed sessions — bounded
-      spark.catalog.dropTempView(name)
-      rows.toSeq
-        .map(r2 => (r2.getLong(0), r2.getLong(1), r2.getLong(2), r2.getLong(3)))
-        .toDF("user_id", "start_ms", "end_ms", "n_events")
-    } finally rmTree(root)
-  }
+  def sessionReplay(spark: SparkSession, sfDir: String, nBatches: Int = 4): DataFrame =
+    drainSessions(spark, eventFixture(spark, sfDir, s"sess-$nBatches", nBatches)(sessionEvents) {
+      (e, _, _, bucket) => inOrder(e, bucket, nBatches, "user_id", "ts_utc")
+    }, sfDir)
 
   /** Driver-visible STREAM-STATIC ENRICHMENT JOIN — the fifth
     * streaming family under the gate (after the fold, the windowed
@@ -644,91 +528,32 @@ object StreamReplay {
     * so the fixture shape matches the other replays. Exact arithmetic:
     * purchase values fold as integer cents. Final read bounded by the
     * segment domain (5 rows), never the event count. */
-  def staticJoinReplay(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      nBatches: Int = 4): DataFrame = {
-    val inDir = cachedFixture(sfDir, s"enrich-$nBatches") { fixDir =>
-      val ev = graft.Tables.events(spark, sfDir)
-      val (e, _, _, bucket) = timeSliced(
-        ev.filter(col("event_type") === "purchase")
-          .select(col("user_id"),
-            round(col("value") * 100).cast("long").as("cents"),
-            graft.Tables.eventMicros(ev).as("tsu")), nBatches)
-      writeBuckets((0 until nBatches).map(b =>
-        e.filter(bucket === b).select("user_id", "cents")), fixDir)
-      graft.pipeline.Dedup.freeCheckpoint(e)
+  def staticJoinReplay(spark: SparkSession, sfDir: String, nBatches: Int = 4): DataFrame = {
+    val inDir = eventFixture(spark, sfDir, s"enrich-$nBatches", nBatches)(ev =>
+      ev.filter(col("event_type") === "purchase")
+        .select(col("user_id"), round(col("value") * 100).cast("long").as("cents"),
+          graft.Tables.eventMicros(ev).as("tsu"))) { (e, _, _, bucket) =>
+      inOrder(e, bucket, nBatches, "user_id", "cents")
     }
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_enrich_")
-    try {
-      val dim = broadcast(graft.Tables.customer(spark, sfDir)
-        .select(col("c_custkey"), col("c_mktsegment")))
-      val src = spark.readStream
-        .schema("user_id LONG, cents LONG")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$inDir/b*")
-      val agg = src.join(dim, col("user_id") === col("c_custkey"))
+    val dim = broadcast(graft.Tables.customer(spark, sfDir)
+      .select(col("c_custkey"), col("c_mktsegment")))
+    drain(buckets(spark, inDir, "user_id LONG, cents LONG")
+        .join(dim, col("user_id") === col("c_custkey"))
         .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n"), sum("cents").as("cents"))
-      val name = s"stream_static_join_${runCounter.incrementAndGet()}"
-      withShufflePartitions(spark, statePartitionsFor(sfDir)) {
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", root.resolve("ck").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      val schema = spark.table(name).schema
-      val rows = spark.table(name).collect() // segment domain — bounded
-      spark.catalog.dropTempView(name)
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    } finally rmTree(root)
+        .agg(count(lit(1)).as("n"), sum("cents").as("cents")),
+      "complete", statePartitionsFor(sfDir))(identity)
   }
 
-  /** Driver-visible STREAM-STREAM INTERVAL JOIN — the fourth stateful
-    * streaming family (after the fold, the windowed aggregation and
-    * sessionization): each purchase matched to the same user's clicks
-    * in the prior 30 minutes, both sides read as watermarked streams
-    * of the events table and inner-joined on a time-bound condition
-    * (the streaming twin of the batch [[graft.operators.RangeJoin]]
-    * shape ev_bursts uses).
-    *
-    * Determinism: an INNER interval join emits every match once both
-    * rows have arrived — the watermark bounds STATE, not emission —
-    * so the drained result is exactly the batch join, provided no
-    * needed row is evicted early. Time-ordered buckets guarantee
-    * that: both sources admit the same bucket per micro-batch
-    * (maxFilesPerTrigger=1 over identical files), so when a purchase
-    * in batch k (p_ts ≥ T_{k−1}) probes, the watermark is
-    * T_{k−1} − 1 h and a click is evicted only once the watermark
-    * passes c_ts + 30 min, i.e. c_ts < T_{k−1} − 90 min — strictly
-    * older than any click the purchase can need (≥ p_ts − 30 min ≥
-    * T_{k−1} − 30 min). Oracle: the plain batch join SQL. */
-  /** SHARED interval-join fixtures — the round-12 harness-tax cut:
-    * the four interval-join drains used to build four near-identical
-    * 5-bucket fixtures PER INVOCATION (the fixture write was ~24 s of
-    * the 168 s r11 bench for this one family). The ordered fixture
-    * (time-ordered buckets + the watermark-flush sentinel bucket) is
-    * byte-reusable by ALL THREE ordered drains — inner, leftOuter,
-    * fullOuter — and across bench passes, so it is built once per
-    * (sfDir, nBatches) per session and cached here; the late variant
-    * caches its own out-of-order fixture the same way. Cached roots
-    * are deleted by a JVM shutdown hook (the per-drain scratch —
-    * checkpoints, memory sinks — stays per-invocation as before: that
-    * is the OPERATOR cost the bench exists to measure; in production
-    * the source is a standing log, and a per-query fixture write is
-    * pure harness).
-    *
-    * Sentinel-sharing safety for the INNER drain: the sentinel rows
-    * (far-future ts, negative NON-MATCHING users -1/-2) can never
-    * produce a join match, and an inner interval join's watermark
-    * bounds STATE, not emission — so draining the 5-bucket fixture
-    * emits exactly the 4-bucket matches (the output filter on
-    * negative ids is belt-and-braces). Verified row-identical to the
-    * unshared fixture by the unchanged batch oracle. */
+  /** Cached fixture roots, keyed (sfDir or cache key, content kind).
+    * Cached roots are deleted by a JVM shutdown hook or by
+    * [[dropCachedFixtures]]; the per-drain scratch (checkpoints,
+    * sinks) stays per-invocation — that is the OPERATOR cost a bench
+    * measures, while in production the source is a standing log and a
+    * per-query fixture write is pure harness. */
   private val fixtureCache =
-    new scala.collection.concurrent.TrieMap[(String, String), java.nio.file.Path]()
+    new scala.collection.concurrent.TrieMap[(String, String), Path]()
   private val fixtureRoots =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+    new java.util.concurrent.ConcurrentLinkedQueue[Path]()
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       fixtureRoots.forEach(p =>
@@ -744,10 +569,9 @@ object StreamReplay {
     * Only for fixtures that are a pure function of sfDir — replays
     * taking caller-supplied datasets (the op-log family) stay
     * per-invocation. */
-  private def cachedFixture(sfDir: String, kind: String)(
-      build: java.nio.file.Path => Unit): java.nio.file.Path =
+  private def cachedFixture(sfDir: String, kind: String)(build: Path => Unit): Path =
     fixtureCache.getOrElseUpdate((sfDir, kind), {
-      val root = java.nio.file.Files.createTempDirectory(s"graft_fixture_${kind}_")
+      val root = Files.createTempDirectory(s"graft_fixture_${kind}_")
       fixtureRoots.add(root)
       val inDir = root.resolve("in")
       build(inDir)
@@ -759,10 +583,8 @@ object StreamReplay {
     * scale rung completes: fixtures are keyed by corpus dir and a
     * finished rung never returns to its corpus, so holding its bucket
     * dirs (10M-event parquet at the 100× rung) until JVM shutdown is
-    * pure scratch-disk growth (ScaleBench's per-rung free, r14 advice
-    * #4 — session caches accumulated across rungs OOM'd the default
-    * driver heap). Safe mid-session: the next request for a dropped
-    * (sfDir, kind) simply rebuilds. */
+    * pure scratch-disk growth. Safe mid-session: the next request for
+    * a dropped (sfDir, kind) simply rebuilds. */
   def dropCachedFixtures(sfDir: String): Unit =
     fixtureCache.keys.filter(_._1 == sfDir).foreach { key =>
       fixtureCache.remove(key).foreach { inDir =>
@@ -772,83 +594,75 @@ object StreamReplay {
       }
     }
 
-  /** Time-ordered (purchase|click) buckets + sentinel bucket, built
-    * once per session per (sfDir, nBatches). Returns the bucket dir. */
-  private def orderedIntervalFixture(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, nBatches: Int): java.nio.file.Path =
-    cachedFixture(sfDir, s"ssj-$nBatches") { inDir =>
-      import spark.implicits._
-      val ev = graft.Tables.events(spark, sfDir)
-      val (e, _, hi, bucket) = timeSliced(
-        ev.select(col("event_id"), col("user_id"), col("event_type"),
-          graft.Tables.eventTime(ev).as("ts_utc"),
-          graft.Tables.eventMicros(ev).as("tsu"))
-          .filter(col("event_type").isin("click", "purchase")), nBatches)
-      // watermark-flush sentinel (see intervalJoinOuterReplay): +10 h,
-      // one per side so the min-across-sides watermark advances
-      val sentinelTs = new java.sql.Timestamp(hi / 1000 + 36000000L)
-      val sentinels = Seq(
-        (-1L, -1L, "purchase", sentinelTs),
-        (-2L, -2L, "click", sentinelTs))
-        .toDF("event_id", "user_id", "event_type", "ts_utc")
-      writeBuckets((0 until nBatches).map(b =>
-        e.filter(bucket === b).select("event_id", "user_id", "event_type", "ts_utc"))
-        :+ sentinels, inDir)
-      graft.pipeline.Dedup.freeCheckpoint(e)
+  /** Time-ordered (purchase|click) buckets + a watermark-flush
+    * sentinel bucket, built once per session per (sfDir, nBatches) and
+    * shared by the three ordered interval-join drains — inner,
+    * leftOuter, fullOuter.
+    *
+    * Sentinel-sharing safety for the INNER drain: the sentinel rows
+    * (far-future ts, negative NON-MATCHING users -1/-2) can never
+    * produce a join match, and an inner interval join's watermark
+    * bounds STATE, not emission — so draining the 5-bucket fixture
+    * emits exactly the 4-bucket matches (the output filter on
+    * negative ids is belt-and-braces). */
+  private def orderedIntervalFixture(spark: SparkSession, sfDir: String, nBatches: Int): Path =
+    eventFixture(spark, sfDir, s"ssj-$nBatches", nBatches)(clicksAndPurchases) {
+      (e, _, hi, bucket) =>
+        import spark.implicits._
+        // watermark-flush sentinel (see intervalJoinOuterReplay): +10 h,
+        // one per side so the min-across-sides watermark advances
+        val sentinelTs = new java.sql.Timestamp(hi / 1000 + 36000000L)
+        val sentinels = Seq(
+          (-1L, -1L, "purchase", sentinelTs),
+          (-2L, -2L, "click", sentinelTs))
+          .toDF("event_id", "user_id", "event_type", "ts_utc")
+        inOrder(e, bucket, nBatches, "event_id", "user_id", "event_type", "ts_utc") :+ sentinels
     }
 
-  def intervalJoinReplay(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      nBatches: Int = 4): DataFrame = {
-    val inDir = orderedIntervalFixture(spark, sfDir, nBatches)
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_ssj_")
-    try {
-      drainIntervalJoin(spark, inDir, root,
-        s"stream_interval_join_${runCounter.incrementAndGet()}",
-        stateParts = statePartitionsFor(sfDir))
-        .filter(col("purchase_id") >= 0) // sentinel can't match; belt-and-braces
-    } finally rmTree(root)
+  /** The purchase×click interval join over the buckets under `inDir`
+    * — shared by the time-ordered, late and outer replays. `joinType`
+    * switches the join; user_id coalesces across sides so fullOuter's
+    * click-only rows carry it too (a no-op for inner/leftOuter, where
+    * p_user is never null). */
+  private def intervalJoin(spark: SparkSession, inDir: Path, joinType: String): DataFrame = {
+    def side(kind: String, prefix: String) = buckets(spark, inDir,
+        "event_id LONG, user_id LONG, event_type STRING, ts_utc TIMESTAMP")
+      .filter(col("event_type") === kind)
+      .select(col("event_id").as(s"${prefix}_id"),
+        col("user_id").as(s"${prefix}_user"),
+        col("ts_utc").as(s"${prefix}_ts"))
+      .withWatermark(s"${prefix}_ts", "1 hour")
+    side("purchase", "p")
+      .join(side("click", "c"),
+        expr("c_user = p_user AND c_ts BETWEEN p_ts - INTERVAL 30 MINUTES AND p_ts"),
+        joinType)
+      .select(col("p_id").as("purchase_id"), col("c_id").as("click_id"),
+        coalesce(col("p_user"), col("c_user")).as("user_id"))
   }
 
-  /** Build + drain the purchase×click interval join over the bucket
-    * files under `inDir` — shared by the time-ordered, late and
-    * left-outer replays. `outer` switches the join type; the result
-    * frame keeps null ids (built via createDataFrame, not a typed
-    * tuple map, for exactly that reason). user_id coalesces across
-    * sides so fullOuter's click-only rows carry it too (a no-op for
-    * inner/leftOuter, where p_user is never null). */
-  private def drainIntervalJoin(spark: org.apache.spark.sql.SparkSession,
-      inDir: java.nio.file.Path, root: java.nio.file.Path, name: String,
-      joinType: String = "inner",
-      stateParts: Int = StatePartitions): DataFrame = {
-    withShufflePartitions(spark, stateParts) {
-      val schema = "event_id LONG, user_id LONG, event_type STRING, ts_utc TIMESTAMP"
-      def side(kind: String, prefix: String) = spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$inDir/b*")
-        .filter(col("event_type") === kind)
-        .select(col("event_id").as(s"${prefix}_id"),
-          col("user_id").as(s"${prefix}_user"),
-          col("ts_utc").as(s"${prefix}_ts"))
-        .withWatermark(s"${prefix}_ts", "1 hour")
-      val joined = side("purchase", "p")
-        .join(side("click", "c"),
-          expr("c_user = p_user AND c_ts BETWEEN p_ts - INTERVAL 30 MINUTES AND p_ts"),
-          joinType)
-        .select(col("p_id").as("purchase_id"), col("c_id").as("click_id"),
-          coalesce(col("p_user"), col("c_user")).as("user_id"))
-      val q = joined.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", root.resolve("ck").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val rows = spark.table(name).collect() // in-window pair count — bounded
-    val outSchema = spark.table(name).schema
-    spark.catalog.dropTempView(name)
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
-  }
+  /** Driver-visible STREAM-STREAM INTERVAL JOIN — the fourth stateful
+    * streaming family (after the fold, the windowed aggregation and
+    * sessionization): each purchase matched to the same user's clicks
+    * in the prior 30 minutes, both sides read as watermarked streams
+    * of the events table and inner-joined on a time-bound condition
+    * (the streaming twin of the batch [[graft.operators.RangeJoin]]
+    * shape ev_bursts uses).
+    *
+    * Determinism: an INNER interval join emits every match once both
+    * rows have arrived — the watermark bounds STATE, not emission —
+    * so the drained result is exactly the batch join, provided no
+    * needed row is evicted early. Time-ordered buckets guarantee
+    * that: both sources admit the same bucket per micro-batch (one
+    * file per trigger over identical files), so when a purchase
+    * in batch k (p_ts ≥ T_{k−1}) probes, the watermark is
+    * T_{k−1} − 1 h and a click is evicted only once the watermark
+    * passes c_ts + 30 min, i.e. c_ts < T_{k−1} − 90 min — strictly
+    * older than any click the purchase can need (≥ p_ts − 30 min ≥
+    * T_{k−1} − 30 min). Oracle: the plain batch join SQL. */
+  def intervalJoinReplay(spark: SparkSession, sfDir: String, nBatches: Int = 4): DataFrame =
+    drain(intervalJoin(spark, orderedIntervalFixture(spark, sfDir, nBatches), "inner"),
+      "append", statePartitionsFor(sfDir))(identity)
+      .filter(col("purchase_id") >= 0) // sentinel can't match; belt-and-braces
 
   /** LEFT OUTER stream-stream interval join — the join family's
     * eviction-driven half: a matched pair emits like the inner join,
@@ -867,17 +681,11 @@ object StreamReplay {
     * p_ts + 30 min. The sentinel purchase itself can never flush
     * (nothing is above it) and is filtered by id; drained result =
     * the batch LEFT JOIN exactly. */
-  def intervalJoinOuterReplay(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      nBatches: Int = 4): DataFrame = {
-    val inDir = orderedIntervalFixture(spark, sfDir, nBatches)
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_ssj_outer_")
-    try {
-      drainIntervalJoin(spark, inDir, root,
-        s"stream_interval_join_outer_${runCounter.incrementAndGet()}", "leftOuter",
-        stateParts = statePartitionsFor(sfDir))
-        .filter(col("purchase_id") >= 0) // drop the flush sentinel
-    } finally rmTree(root)
-  }
+  def intervalJoinOuterReplay(spark: SparkSession, sfDir: String,
+      nBatches: Int = 4): DataFrame =
+    drain(intervalJoin(spark, orderedIntervalFixture(spark, sfDir, nBatches), "leftOuter"),
+      "append", statePartitionsFor(sfDir))(identity)
+      .filter(col("purchase_id") >= 0) // drop the flush sentinel
 
   /** FULL OUTER stream-stream interval join — both sides' unmatched
     * verdicts under the same eviction-is-emission rule
@@ -889,18 +697,12 @@ object StreamReplay {
     * themselves can never flush — nothing is above them — and are
     * filtered by their negative ids). Drained = the batch FULL JOIN
     * with pre-filtered sides. */
-  def intervalJoinFullReplay(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      nBatches: Int = 4): DataFrame = {
-    val inDir = orderedIntervalFixture(spark, sfDir, nBatches)
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_ssj_full_")
-    try {
-      drainIntervalJoin(spark, inDir, root,
-        s"stream_interval_join_full_${runCounter.incrementAndGet()}", "fullOuter",
-        stateParts = statePartitionsFor(sfDir))
-        .filter(coalesce(col("purchase_id"), lit(0L)) >= 0 &&
-          coalesce(col("click_id"), lit(0L)) >= 0) // drop both flush sentinels
-    } finally rmTree(root)
-  }
+  def intervalJoinFullReplay(spark: SparkSession, sfDir: String,
+      nBatches: Int = 4): DataFrame =
+    drain(intervalJoin(spark, orderedIntervalFixture(spark, sfDir, nBatches), "fullOuter"),
+      "append", statePartitionsFor(sfDir))(identity)
+      .filter(coalesce(col("purchase_id"), lit(0L)) >= 0 &&
+        coalesce(col("click_id"), lit(0L)) >= 0) // drop both flush sentinels
 
   /** LATE data through the STREAM-STREAM join — the third event-time
     * stateful family under disorder (after the windowed aggregation
@@ -915,67 +717,49 @@ object StreamReplay {
     * [[intervalJoinReplay]] eviction argument, unchanged). Drained
     * result = the batch join over the on-time slices; pairs whose
     * click fell in slice 2 are the observable loss. */
-  def intervalJoinLateReplay(spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame = {
+  def intervalJoinLateReplay(spark: SparkSession, sfDir: String): DataFrame = {
     // out-of-order fixture, cached per session like the ordered one
     // (the lateness-margin require runs at build time — a property of
     // the TABLE, unchanged between passes)
-    val inDir = cachedFixture(sfDir, "ssj-late") { fixDir =>
-      val nSlices = 4
-      val ev = graft.Tables.events(spark, sfDir)
-      val (e, lo, hi, bucket) = timeSliced(
-        ev.select(col("event_id"), col("user_id"), col("event_type"),
-          graft.Tables.eventTime(ev).as("ts_utc"),
-          graft.Tables.eventMicros(ev).as("tsu"))
-          .filter(col("event_type").isin("click", "purchase")), nSlices)
-      val slices = lateSliceFilters(e, lo, hi, bucket, nSlices)
-      // per-kind tightening: the global watermark after slice 3a is
-      // min over the two sides' maxes
-      val mk = e.agg(
-        max(when(slices(2) && col("event_type") === "purchase", col("tsu"))).as("p3a"),
-        max(when(slices(2) && col("event_type") === "click", col("tsu"))).as("c3a"),
-        max(when(slices(4), col("tsu"))).as("max2")).head()
-      require(!mk.isNullAt(0) && !mk.isNullAt(1) && !mk.isNullAt(2) &&
-        mk.getLong(2) / 1000 < math.min(mk.getLong(0), mk.getLong(1)) / 1000 - 3600000L,
-        s"slice-2 max ${mk.get(2)} not strictly below BOTH kinds' slice-3a " +
-          s"watermark (purchase ${mk.get(0)}, click ${mk.get(1)}, -1h): " +
-          "join lateness would be data-dependent")
-      writeBuckets(slices.map(s =>
-        e.filter(s).select("event_id", "user_id", "event_type", "ts_utc")), fixDir)
-      graft.pipeline.Dedup.freeCheckpoint(e)
+    val inDir = eventFixture(spark, sfDir, "ssj-late", 4)(clicksAndPurchases) {
+      (e, lo, hi, bucket) =>
+        val slices = lateSliceFilters(e, lo, hi, bucket, 4)
+        // per-kind tightening: the global watermark after slice 3a is
+        // min over the two sides' maxes
+        val mk = e.agg(
+          max(when(slices(2) && col("event_type") === "purchase", col("tsu"))).as("p3a"),
+          max(when(slices(2) && col("event_type") === "click", col("tsu"))).as("c3a"),
+          max(when(slices(4), col("tsu"))).as("max2")).head()
+        require(!mk.isNullAt(0) && !mk.isNullAt(1) && !mk.isNullAt(2) &&
+          mk.getLong(2) / 1000 < math.min(mk.getLong(0), mk.getLong(1)) / 1000 - 3600000L,
+          s"slice-2 max ${mk.get(2)} not strictly below BOTH kinds' slice-3a " +
+            s"watermark (purchase ${mk.get(0)}, click ${mk.get(1)}, -1h): " +
+            "join lateness would be data-dependent")
+        slices.map(s => e.filter(s).select("event_id", "user_id", "event_type", "ts_utc"))
     }
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_ssj_late_")
-    try {
-      drainIntervalJoin(spark, inDir, root,
-        s"stream_interval_join_late_${runCounter.incrementAndGet()}",
-        stateParts = statePartitionsFor(sfDir))
-    } finally rmTree(root)
+    drain(intervalJoin(spark, inDir, "inner"), "append", statePartitionsFor(sfDir))(identity)
+  }
+
+  /** Run `body` over the bucket dir of an op-log replay: cached per
+    * (cacheKey, kind) when the CALLER vouches the ops are a pure
+    * function of that key (KVQueries passes the source dir; specs
+    * with synthetic logs pass None and get a per-invocation fixture,
+    * deleted however `body` exits). */
+  private def withOpFixture[T](kind: String, cacheKey: Option[String])(
+      build: Path => Unit)(body: Path => T): T = cacheKey match {
+    case Some(k) => body(cachedFixture(k, kind)(build))
+    case None =>
+      val root = Files.createTempDirectory(s"graft_fixture_${kind}_")
+      try {
+        val inDir = root.resolve("in")
+        build(inDir)
+        body(inDir)
+      } finally rmTree(root)
   }
 
   /** Run the op log through the streaming path; return final
     * (key, value) state. Blocking (AvailableNow drains the source and
     * terminates). */
-  /** Resolve the bucket dir for an op-log replay: cached per
-    * (cacheKey, kind) when the CALLER vouches the ops are a pure
-    * function of that key (KVQueries passes the source dir; specs
-    * with synthetic logs pass None and keep per-invocation
-    * fixtures). Returns (bucket dir, per-run scratch root). */
-  private def opFixture(kind: String, cacheKey: Option[String])(
-      build: java.nio.file.Path => Unit): (java.nio.file.Path, java.nio.file.Path) = {
-    val root = java.nio.file.Files.createTempDirectory(s"graft_stream_${kind}_")
-    // callers enter their try/finally only after we return — a build
-    // failure here would otherwise leak the freshly created scratch
-    // root for the JVM lifetime (cached roots are shutdown-hooked,
-    // scratch roots are not)
-    val inDir = try {
-      cacheKey match {
-        case Some(k) => cachedFixture(k, kind)(build)
-        case None =>
-          val d = root.resolve("in"); build(d); d
-      }
-    } catch { case e: Throwable => rmTree(root); throw e }
-    (inDir, root)
-  }
-
   def stateReplay(ops: Dataset[Op], nBatches: Int = 4,
       cacheKey: Option[String] = None): DataFrame = {
     val spark = ops.sparkSession
@@ -983,36 +767,18 @@ object StreamReplay {
     require(nBatches >= 1, "nBatches must be positive")
     // stateTableReplay shares this fixture kind: both stream the same
     // deduped bucketed write log
-    val (inDir, root) = opFixture(s"oplog-writes-$nBatches", cacheKey)(
-      bucketedWriteLog(ops, nBatches, _))
-    try {
-      // 2. stream the buckets through the live fold, one per batch
-      val name = s"stream_state_replay_${runCounter.incrementAndGet()}"
-      val src = spark.readStream
-        .schema(spark.read.parquet(s"$inDir/b*").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$inDir/b*")
-      // foldStream, not liveState: the streamed log is ALREADY
-      // exactly-once (step 1), so the in-stream dropDuplicates would
-      // only push every (clientId, reqId) pair through a second state
-      // store for nothing — the operator under the gate is the
-      // incremental fold; the dedup-in-stream path has its own specs
-      withShufflePartitions(spark, StatePartitions) {
-        val q = LiveKV.foldStream(src.as[Op])
-          .writeStream.format("memory").queryName(name)
-          .outputMode("update")
-          .option("checkpointLocation", root.resolve("ck").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      // 3. bounded final read: keys × batches rows, newest update wins
-      val finalRows = spark.table(name)
-        .groupBy("key").agg(max_by(col("value"), col("max_seq")).as("value"))
-        .collect()
-      spark.catalog.dropTempView(name)
-      finalRows.toSeq.map(r => (r.getString(0), r.getString(1))).toDF("key", "value")
-    } finally rmTree(root)
+    withOpFixture(s"oplog-writes-$nBatches", cacheKey)(bucketedWriteLog(ops, nBatches, _)) {
+      inDir =>
+        // foldStream, not liveState: the streamed log is ALREADY
+        // exactly-once (step 1), so the in-stream dropDuplicates would
+        // only push every (clientId, reqId) pair through a second state
+        // store for nothing — the operator under the gate is the
+        // incremental fold; the dedup-in-stream path has its own specs
+        drain(LiveKV.foldStream(buckets(spark, inDir, OpSchema).as[Op]), "update",
+          StatePartitions)(
+          // bounded final read: keys × batches rows, newest update wins
+          _.groupBy("key").agg(max_by(col("value"), col("max_seq")).as("value")))
+    }
   }
 
   /** The IN-STREAM exactly-once gate under the oracle gate — K4's
@@ -1039,7 +805,7 @@ object StreamReplay {
       cacheKey: Option[String] = None): DataFrame = {
     val spark = ops.sparkSession
     require(nBatches >= 1, "nBatches must be positive")
-    val (inDir, root) = opFixture(s"oplog-raw-$nBatches", cacheKey) { fixDir =>
+    withOpFixture(s"oplog-raw-$nBatches", cacheKey) { fixDir =>
       val log = ops.toDF.localCheckpoint(true)
       val maxSeqRow = log.agg(max("seq")).head()
       val maxSeq = if (maxSeqRow.isNullAt(0)) 0L else maxSeqRow.getLong(0)
@@ -1048,30 +814,13 @@ object StreamReplay {
         lit(nBatches - 1L))
       writeBuckets((0 until nBatches).map(b => log.filter(bucket === b)), fixDir)
       graft.pipeline.Dedup.freeCheckpoint(log)
+    } { inDir =>
+      drain(buckets(spark, inDir, OpSchema).dropDuplicates("clientId", "reqId"), "append",
+        StatePartitions)(
+        // client domain — bounded
+        _.groupBy(col("clientId").as("client_id"))
+          .agg(count(lit(1)).as("n_reqs"), max("reqId").as("max_req_id")))
     }
-    try {
-      val name = s"stream_dedup_${runCounter.incrementAndGet()}"
-      withShufflePartitions(spark, StatePartitions) {
-        val src = spark.readStream
-          .schema(spark.read.parquet(s"$inDir/b*").schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(s"$inDir/b*")
-        val q = src.dropDuplicates("clientId", "reqId")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", root.resolve("ck").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      val rollup = spark.table(name)
-        .groupBy(col("clientId").as("client_id"))
-        .agg(count(lit(1)).as("n_reqs"), max("reqId").as("max_req_id"))
-      val schema = rollup.schema
-      val rows = rollup.collect() // client domain — bounded
-      spark.catalog.dropTempView(name)
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    } finally rmTree(root)
   }
 
   /** Dedup-state EVICTION under the oracle gate —
@@ -1110,7 +859,7 @@ object StreamReplay {
     // the watermark delay (w/8 s) is derived from the log's seq range
     // and must match the cached buckets — it rides the fixture cache
     // as a sibling file
-    val (inDir, root) = opFixture(s"oplog-evict-$nBatches", cacheKey) { fixDir =>
+    withOpFixture(s"oplog-evict-$nBatches", cacheKey) { fixDir =>
       // one row per (clientId, reqId) batch-side: the planted rows are
       // the ONLY duplicates the stream sees, so emission counts are
       // exactly n_reqs + (1 per re-admitted plant)
@@ -1156,49 +905,26 @@ object StreamReplay {
         withTs(planted)
       }
       writeBuckets(frames, fixDir)
-      java.nio.file.Files.writeString(fixDir.resolve("_delay_seconds"),
-        (w / 8).toString)
+      Files.writeString(fixDir.resolve("_delay_seconds"), (w / 8).toString)
       graft.pipeline.Dedup.freeCheckpoint(base)
-    }
-    try {
-      val delaySec = java.nio.file.Files.readString(
-        inDir.resolve("_delay_seconds")).trim.toLong
-      val name = s"stream_dedup_evict_${runCounter.incrementAndGet()}"
-      withShufflePartitions(spark, StatePartitions) {
-        val src = spark.readStream
-          .schema(spark.read.parquet(s"$inDir/b*").schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(s"$inDir/b*")
-        val q = src
+    } { inDir =>
+      val delaySec = Files.readString(inDir.resolve("_delay_seconds")).trim.toLong
+      drain(buckets(spark, inDir, "clientId LONG, reqId LONG, seq LONG, ets TIMESTAMP")
           .withWatermark("ets", s"$delaySec seconds")
-          .dropDuplicatesWithinWatermark("clientId", "reqId")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", root.resolve("ck").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      // bounded final read: ≤ pair-domain + plants rows, rolled up
-      // per client BEFORE the collect (client-domain-sized)
-      val rollup = spark.table(name)
-        .groupBy(col("clientId").as("client_id"))
-        .agg(count(lit(1)).as("n_emitted"),
-          countDistinct("reqId").as("n_reqs"))
-      val schema = rollup.schema
-      val rows = rollup.collect()
-      spark.catalog.dropTempView(name)
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    } finally rmTree(root)
+          .dropDuplicatesWithinWatermark("clientId", "reqId"),
+        "append", StatePartitions)(
+        // bounded final read: ≤ pair-domain + plants rows, rolled up
+        // per client BEFORE the collect (client-domain-sized)
+        _.groupBy(col("clientId").as("client_id"))
+          .agg(count(lit(1)).as("n_emitted"), countDistinct("reqId").as("n_reqs")))
+    }
   }
 
   /** Step 1 of the op-log replays, shared by [[stateReplay]] and
-    * [[stateTableReplay]]: dedup the log batch-side, bucket the writes
-    * by seq range into `nBatches` ordered files under `inDir` (see the
-    * object scaladoc for why dedup is batch-side), and return the
-    * (already-freed-from-checkpoint) writes frame for its schema. */
-  private def bucketedWriteLog(ops: Dataset[Op], nBatches: Int,
-      inDir: java.nio.file.Path): DataFrame = {
+    * [[stateTableReplay]]: dedup the log batch-side and bucket the
+    * writes by seq range into `nBatches` ordered files under `inDir`
+    * (see the object scaladoc for why dedup is batch-side). */
+  private def bucketedWriteLog(ops: Dataset[Op], nBatches: Int, inDir: Path): Unit = {
     // Folded ONCE into an eager checkpoint: the per-bucket writes are
     // coalesce(1) single-task jobs, and without the checkpoint each
     // would re-run the whole dedup aggregate single-threaded (4x the
@@ -1212,7 +938,6 @@ object StreamReplay {
       lit(nBatches - 1L))
     writeBuckets((0 until nBatches).map(b => writes.filter(bucket === b).toDF), inDir)
     graft.pipeline.Dedup.freeCheckpoint(writes.toDF) // buckets are on disk
-    writes.toDF
   }
 
   /** The PRODUCTION streaming sink under the gate: the same bucketed
@@ -1232,27 +957,17 @@ object StreamReplay {
     val spark = ops.sparkSession
     import spark.implicits._
     require(nBatches >= 1, "nBatches must be positive")
+    def stateDir(root: Path) = root.resolve("state").toString
     // same fixture kind as stateReplay: both stream the deduped
     // bucketed write log (one cached build serves both)
-    val (inDir, root) = opFixture(s"oplog-writes-$nBatches", cacheKey)(
-      bucketedWriteLog(ops, nBatches, _))
-    try {
-      val stateDir = root.resolve("state").toString
-      val src = spark.readStream
-        .schema(spark.read.parquet(s"$inDir/b*").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$inDir/b*")
-      withShufflePartitions(spark, StatePartitions) {
-        val q = LiveKV.stateTableSink(src.as[Op], stateDir,
-            root.resolve("ck").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      // the RESULT is the on-disk table; localize it before teardown
-      // (bounded by the key domain — the same bound as stateReplay)
-      val rows = LiveKV.readStateTable(spark, stateDir).collect()
-      rows.toSeq.map(r => (r.getString(0), r.getString(1))).toDF("key", "value")
-    } finally rmTree(root)
+    withOpFixture(s"oplog-writes-$nBatches", cacheKey)(bucketedWriteLog(ops, nBatches, _)) {
+      inDir =>
+        run(spark, Some(StatePartitions))(root =>
+          LiveKV.stateTableSink(buckets(spark, inDir, OpSchema).as[Op], stateDir(root),
+            root.resolve("ck").toString))(
+          // the RESULT is the on-disk table; localize it before teardown
+          // (bounded by the key domain — the same bound as stateReplay)
+          root => local(LiveKV.readStateTable(spark, stateDir(root))))
+    }
   }
 }

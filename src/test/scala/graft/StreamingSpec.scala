@@ -163,6 +163,74 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == batchState && streamed.nonEmpty)
   }
 
+  test("StreamReplay.drain: a stream failing mid-drain leaves no view, query, scratch or conf behind") {
+    import graft.streaming.StreamReplay
+    import scala.jdk.CollectionConverters._
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def scratchRoots(): Set[String] = {
+      val ls = java.nio.file.Files.list(tmp)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("graft_stream_")).toSet
+      finally ls.close()
+    }
+    def streamViews(): Seq[String] = spark.catalog.listTables().collect().toSeq
+      .filter(t => t.isTemporary && t.name.startsWith("stream_")).map(_.name)
+    val partsKey = "spark.sql.shuffle.partitions"
+    val partsBefore = spark.conf.get(partsKey)
+    val rootsBefore = scratchRoots()
+    val dir = java.nio.file.Files.createTempDirectory("drain_spec_")
+    try {
+      val inDir = dir.resolve("in")
+      StreamReplay.writeBuckets(
+        Seq(spark.range(0, 5).toDF("x"), spark.range(5, 10).toDF("x")), inDir)
+      // bucket 1 — the second micro-batch — is the first to carry x >= 5,
+      // so the sink already holds batch 0's rows when the drain fails
+      val boom = udf((x: Long) =>
+        if (x >= 5) throw new IllegalStateException("boom in the second micro-batch") else x)
+      val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        StreamReplay.drain(
+          StreamReplay.buckets(spark, inDir, "x LONG").select(boom(col("x")).as("x")),
+          "append", stateParts = 3)(identity)
+      }
+      assert(Iterator.iterate(err: Throwable)(_.getCause).takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains("boom in the second")),
+        s"unexpected failure: $err")
+      assert(streamViews().isEmpty, s"memory-sink views left registered: ${streamViews()}")
+      assert(spark.streams.active.isEmpty, "a drained query is still active")
+      val leaked = scratchRoots() -- rootsBefore
+      assert(leaked.isEmpty, s"scratch roots left behind: $leaked")
+      assert(spark.conf.get(partsKey) == partsBefore)
+    } finally graft.core.Fs.rmTreeNoFollow(dir)
+  }
+
+  test("cached stateReplay runs no Spark job before its stream starts (bucket schema declared, not inferred)") {
+    import scala.jdk.CollectionConverters._
+    val ops = OpLog.fromEvents(Tables.events(spark, sf0001))
+    val key = Some(s"spec-jobs-$sf0001")
+    val warm = graft.streaming.StreamReplay.stateReplay(ops, cacheKey = key) // builds the fixture
+      .as[(String, String)].collect().toMap
+    // per job in start order: does it belong to a streaming query?
+    val streamJob = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        streamJob.add(Option(e.properties).exists(_.getProperty("sql.streaming.queryId") != null))
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graftbus.BusFlush.flush(sc)
+    sc.addSparkListener(listener)
+    val cached = try {
+      val out = graft.streaming.StreamReplay.stateReplay(ops, cacheKey = key)
+        .as[(String, String)].collect().toMap
+      org.apache.spark.graftbus.BusFlush.flush(sc)
+      out
+    } finally sc.removeSparkListener(listener)
+    assert(cached == warm && cached.nonEmpty)
+    val jobs = streamJob.asScala.toSeq
+    assert(jobs.contains(true), "no streaming job observed")
+    val before = jobs.takeWhile(!_).size
+    assert(before == 0, s"$before of ${jobs.size} jobs ran before the stream started")
+  }
+
   test("kv_state_skewed: salted fold over the planted hot key == plain fold") {
     val ops = OpLog.fromEventsSkewed(Tables.events(spark, sf0001))
     // the hot key must actually be hot (~70% of writes), or the skew
