@@ -153,7 +153,9 @@ object Tables {
     * Bench, ScaleBench, CaptureQuery, AnnCapProbe) build here, each
     * passing its own core count. The codegen cache is JVM-wide and a
     * static conf, fixed by the first session the process builds, and it
-    * is sized to the working set ([[CodegenCacheEntries]]).
+    * is sized to the working set ([[CodegenCacheEntries]]). The session
+    * carries [[GraftExtensions]]: graft's SQL functions and the
+    * [[SingleTaskSort]] runtime rule.
     */
   def session(appName: String, cores: Int = 4): SparkSession = {
     val spark = SparkSession.builder()
@@ -161,6 +163,7 @@ object Tables {
       // required for the worker-failure semantics tests
       .master(s"local[$cores, 2]")
       .appName(appName)
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       // over-provisioned shuffle partitions are THE production
       // setting (round 14, SCALE_r13_shuf256): at the 100× rung a
@@ -168,8 +171,10 @@ object Tables {
       // sort memory and spills (q21 wall 22.8 → 12.4 s at 256); at
       // small data AQE coalesces the excess post-shuffle, so the
       // only cost is map-side file handles — asymmetric in favor of
-      // over-provisioning. Streaming state stores size it per query
-      // instead (StreamReplay.drain).
+      // over-provisioning. A small final sort does not pay the
+      // 256-way range exchange and its sampling job either: it sorts
+      // in one task (SingleTaskSort). Streaming state stores size it
+      // per query instead (StreamReplay.drain).
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "256"))
       .config("spark.sql.adaptive.enabled", "true")

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   *
   *   dedup (exactly-once) -> per-key ordered fold -> state table
   *
-  * All stages are distributed: dedup is a window over (clientId,reqId)
-  * partitions, the fold shuffles once on key and streams key-sorted
+  * All stages are distributed: dedup is an aggregate over (clientId,reqId)
+  * groups, the fold shuffles once on key and streams key-sorted
   * runs — no per-key materialization, no driver involvement. At 100 TB
   * the single fold shuffle on `key` is the only wide dependency.
   */
@@ -31,10 +31,13 @@ object KVEngine {
     * (src/kvraft/server.go:72-80, 187-189); in batch replay "first
     * occurrence in log order wins" is the same observable semantics.
     *
-    * min_by hash aggregate, not a row_number window: the aggregate
-    * gets map-side partial combining (retries collapse before the
-    * shuffle) and needs no per-partition sort — the shape that
-    * survives a retry-heavy log at scale.
+    * A min_by aggregate, not a row_number window: the aggregate gets
+    * map-side partial combining (retries collapse before the shuffle),
+    * so a retry-heavy log shuffles one row per request. It plans as a
+    * SortAggregate, not a hash aggregate: the min_by buffer is a struct
+    * with string fields, which has no mutable hash-map form, so both the
+    * partial and the final side sort on (clientId, reqId), around the
+    * one shuffle on that key.
     */
   def dedup(ops: Dataset[Op]): Dataset[Op] = {
     val spark = ops.sparkSession

@@ -3,7 +3,7 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 
 /** Machine-independent per-query metrics for the bench harness
   * (round 13): wall-clock medians drift ±10-30% with machine-window
@@ -26,6 +26,9 @@ final class TaskMetricsListener extends SparkListener {
   private val spill = new AtomicLong
   private val input = new AtomicLong
   private val records = new AtomicLong
+  private val jobs = new AtomicLong
+
+  override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
 
   override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
     val m = te.taskMetrics
@@ -54,22 +57,22 @@ final class TaskMetricsListener extends SparkListener {
     org.apache.spark.graftbus.BusFlush.flush(sc)
     TaskMetricsListener.Snap(
       tasks.get(), shuffleRead.get(), shuffleWrite.get(), spill.get(), input.get(),
-      records.get())
+      records.get(), jobs.get())
   }
 }
 
 object TaskMetricsListener {
   /** Cumulative counter snapshot; `-` yields the per-window delta. */
   final case class Snap(tasks: Long, shuffleRead: Long, shuffleWrite: Long,
-      spill: Long, input: Long, records: Long = 0L) {
+      spill: Long, input: Long, records: Long = 0L, jobs: Long = 0L) {
     def -(o: Snap): Snap = Snap(tasks - o.tasks, shuffleRead - o.shuffleRead,
       shuffleWrite - o.shuffleWrite, spill - o.spill, input - o.input,
-      records - o.records)
+      records - o.records, jobs - o.jobs)
     /** Compact JSON object: shuffle read/write bytes + records, spill,
-      * task count, scan input bytes. */
+      * task and job counts, scan input bytes. */
     def json: String =
       s"""{"shuffle_read":$shuffleRead,"shuffle_write":$shuffleWrite,""" +
-        s""""shuffle_records":$records,"spill":$spill,"tasks":$tasks,"input":$input}"""
+        s""""shuffle_records":$records,"spill":$spill,"tasks":$tasks,"jobs":$jobs,"input":$input}"""
   }
 
   def install(sc: SparkContext): TaskMetricsListener = {

@@ -73,7 +73,7 @@ class StreamingBoundarySpec extends SparkSpec {
     } finally spark.conf.set(key, old)
   }
 
-  test("late filter lags one batch and is strict at ITS boundary (no-data batches off)") {
+  streamTest("late filter lags one batch and is strict at ITS boundary (no-data batches off)") {
     // with no-data batches disabled, batch k's filter watermark is
     // f(batches <= k-2): at b3 that is 50 000 - 10 000 = 40 000 (NOT
     // the 90 000 b2's data implies). Probes: 15 000 and 39 999 are
@@ -97,7 +97,7 @@ class StreamingBoundarySpec extends SparkSpec {
         s"buffer batch is no longer needed — $out")
   }
 
-  test("idle no-data batches close the watermark lag (default conf)") {
+  streamTest("idle no-data batches close the watermark lag (default conf)") {
     // same feed with no-data batches ON: after b2 the engine runs a
     // no-data batch that promotes the watermark to 90 000, so at b3
     // the 89 999 row IS dropped — the reason interactive experiments
@@ -111,7 +111,7 @@ class StreamingBoundarySpec extends SparkSpec {
       s"no-data batch did not promote the watermark before b3 — $out")
   }
 
-  test("Append-mode window emission is non-strict: end == wm emits") {
+  streamTest("Append-mode window emission is non-strict: end == wm emits") {
     // three windows with data; the terminal watermark lands EXACTLY on
     // [5,6)'s end (16 000 − 10 000 = 6 000): emission is end <= wm, so
     // [4,5) and the tie [5,6) emit while [6,7) (end 7 000 > 6 000)
@@ -125,7 +125,7 @@ class StreamingBoundarySpec extends SparkSpec {
       s"window whose end is ABOVE the watermark emitted — $out")
   }
 
-  test("event-time timeout is strict: timer at exactly wm does not fire") {
+  streamTest("event-time timeout is strict: timer at exactly wm does not fire") {
     implicit val sqlCtx = spark.sqlContext
     // user 1's session times out at 1 000 + gap; user 2's lone event
     // walks the watermark to EXACTLY that timestamp — a strict timer
@@ -154,7 +154,7 @@ class StreamingBoundarySpec extends SparkSpec {
       s"session NOT emitted when wm == lastEvent + gap + 1 ms: timeout rule drifted — $past")
   }
 
-  test("dropDuplicatesWithinWatermark drop is NON-strict: ts == wm is dropped, even at epoch 0") {
+  streamTest("dropDuplicatesWithinWatermark drop is NON-strict: ts == wm is dropped, even at epoch 0") {
     // fact 4 (the asymmetry grows): the dedup-within-watermark input
     // filter drops ts <= wm — where aggregations drop strictly
     // (fact 1). Two consequences pinned here: a row at EXACTLY the
@@ -186,7 +186,7 @@ class StreamingBoundarySpec extends SparkSpec {
     } finally { q.stop(); spark.catalog.dropTempView(name) }
   }
 
-  test("left-outer interval join: null rows emit on EVICTION; end-of-stream flushes nothing (fact 5)") {
+  streamTest("left-outer interval join: null rows emit on EVICTION; end-of-stream flushes nothing (fact 5)") {
     // the boundary behind intervalJoinOuterReplay's sentinel bucket:
     // an unmatched left row's null emission is TRIGGERED by state
     // eviction (global wm past its whole match window) — the engine

@@ -15,7 +15,7 @@ import org.apache.spark.sql.streaming.Trigger
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
-  test("liveState over micro-batches == batch replay (incl. dedup + ordering)") {
+  streamTest("liveState over micro-batches == batch replay (incl. dedup + ordering)") {
     implicit val sqlCtx = spark.sqlContext
     val ops = OpLog.fromEvents(Tables.events(spark, sf0001)).collect().sortBy(_.seq)
     val batchState = KVEngine.replay(OpLog.fromEvents(Tables.events(spark, sf0001)))
@@ -359,7 +359,7 @@ class StreamingSpec extends SparkSpec {
       "late slice removed no pairs: the drop is unobserved")
   }
 
-  test("retried ops across micro-batches apply exactly once") {
+  streamTest("retried ops across micro-batches apply exactly once") {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[Op]
     val query = LiveKV.liveState(stream.toDS())
@@ -381,7 +381,7 @@ class StreamingSpec extends SparkSpec {
   case class TimedOp(seq: Long, clientId: Long, reqId: Long, kind: String,
       key: String, value: String, ts_utc: java.sql.Timestamp)
 
-  test("liveStateBounded: dedup state is watermark-TTL'd — dups inside the horizon drop, after eviction re-apply") {
+  streamTest("liveStateBounded: dedup state is watermark-TTL'd — dups inside the horizon drop, after eviction re-apply") {
     implicit val sqlCtx = spark.sqlContext
     def op(seq: Long, reqId: Long, v: String, min: Int) =
       TimedOp(seq, 1, reqId, "append", "k", v,
@@ -410,7 +410,7 @@ class StreamingSpec extends SparkSpec {
 
   case class TimedDoc(doc_id: Long, text: String, ts_utc: java.sql.Timestamp)
 
-  test("streamingIncremental: stream-static gates == batch incrementalDedup statuses") {
+  streamTest("streamingIncremental: stream-static gates == batch incrementalDedup statuses") {
     implicit val sqlCtx = spark.sqlContext
     val baseText = ("the cat sat of the mat and then in a while it is gone " * 4).trim
     // one-token edit: not byte-identical, but every minhash band
@@ -446,7 +446,7 @@ class StreamingSpec extends SparkSpec {
     } finally query.stop()
   }
 
-  test("streamingIncremental: base snapshot persisted — later micro-batches rescan no base files") {
+  streamTest("streamingIncremental: base snapshot persisted — later micro-batches rescan no base files") {
     implicit val sqlCtx = spark.sqlContext
     // parquet-backed base so a per-batch recompute would show up as
     // FileSourceScanExec nodes in the micro-batch plan
@@ -498,7 +498,7 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("streamingIngest: content dups dropped in-horizon, gates match batch TextAnalysis") {
+  streamTest("streamingIngest: content dups dropped in-horizon, gates match batch TextAnalysis") {
     implicit val sqlCtx = spark.sqlContext
     val goodEn = ("the cat sat of the mat and then in a while it is gone " * 4).trim // 56 toks, stop-heavy
     val german = ("der hund und die katze ist von hier " * 6).trim
@@ -563,7 +563,7 @@ class StreamingSpec extends SparkSpec {
   case class Click(c_user: Long, c_ts: java.sql.Timestamp)
   case class Purchase(p_user: Long, p_ts: java.sql.Timestamp, amount: Double)
 
-  test("stream-stream interval join: purchase matched to clicks within the prior 30 min") {
+  streamTest("stream-stream interval join: purchase matched to clicks within the prior 30 min") {
     implicit val sqlCtx = spark.sqlContext
     def ts(min: Int) = new java.sql.Timestamp(1700000000000L + min * 60000L)
     val clicks = MemoryStream[Click]
@@ -588,7 +588,7 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("sessionize: gap closes a session, timeout emits the last one") {
+  streamTest("sessionize: gap closes a session, timeout emits the last one") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.LiveKV.{ClosedSession, SessionEvent}
     def ev(user: Long, min: Int) =
@@ -618,7 +618,7 @@ class StreamingSpec extends SparkSpec {
 
   case class Ev(ts_utc: java.sql.Timestamp, event_type: String, value: Double)
 
-  test("windowed counts match batch rollup; late data beyond watermark dropped") {
+  streamTest("windowed counts match batch rollup; late data beyond watermark dropped") {
     implicit val sqlCtx = spark.sqlContext
     def ts(min: Int) = new java.sql.Timestamp(3600L * 1000 * 24 * 365 * 54 + min * 60000L)
     val onTime = Seq(
