@@ -83,16 +83,19 @@ object Bench {
       .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
   }
 
-  /** The two compile layers a sample pays: Janino compiles of
-    * whole-stage codegen classes (a miss in the session's codegen
-    * cache) and HotSpot JIT milliseconds. Both are JVM-wide counters;
-    * the bench runs one query at a time, so a delta is that query's. */
-  private final case class Compiles(codegen: Long, jitMs: Long) {
-    def -(o: Compiles): Compiles = Compiles(codegen - o.codegen, jitMs - o.jitMs)
+  /** The JVM-wide counters a sample reads besides the listener's: the
+    * two compile layers — Janino compiles of whole-stage codegen
+    * classes (a miss in the session's codegen cache) and HotSpot JIT
+    * milliseconds — and the [[BuildCache]] builds, hits and build
+    * milliseconds. The bench runs one query at a time, so a delta is
+    * that query's. */
+  private final case class Compiles(codegen: Long, jitMs: Long, cache: BuildCache.Stats) {
+    def -(o: Compiles): Compiles = Compiles(codegen - o.codegen, jitMs - o.jitMs, cache - o.cache)
   }
   private def compiles(): Compiles = Compiles(
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
-    java.lang.management.ManagementFactory.getCompilationMXBean.getTotalCompilationTime)
+    java.lang.management.ManagementFactory.getCompilationMXBean.getTotalCompilationTime,
+    BuildCache.stats)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -166,8 +169,8 @@ object Bench {
       val s = samples(name)
       val good = s.filter(_.sec >= 0).sortBy(_.sec)
       val nFailed = s.size - good.size
-      if (good.isEmpty) name -> QStat(-1.0, 0, 0, 0, zeroSnap, Compiles(0, 0), nFailed,
-        allFailed = true, windowSuspect = false)
+      if (good.isEmpty) name -> QStat(-1.0, 0, 0, 0, zeroSnap,
+        Compiles(0, 0, BuildCache.Stats(0, 0, 0)), nFailed, allFailed = true, windowSuspect = false)
       else {
         // byte metrics from the last SUCCESSFUL pass, not the
         // median-selected one: pass 1 pays every build-once artifact
@@ -218,10 +221,14 @@ object Bench {
     val qsMax = jmap(ok.map { case (k, st) => k -> st.max })
     val qsGc = jmap(ok.map { case (k, st) => k -> st.gc })
     // the per-query record: the listener's counters plus the compile
-    // layers, all from the same (last successful) sample
+    // layers and the build cache, all from the same (last successful)
+    // sample
     val qsBytes = ok.map { case (k, st) =>
+      val c = st.compiled
       "\"" + k + "\":" + st.bytes.json.dropRight(1) +
-        s""","codegen_compiles":${st.compiled.codegen},"jit_ms":${st.compiled.jitMs}}"""
+        s""","codegen_compiles":${c.codegen},"jit_ms":${c.jitMs}""" +
+        s""","cache_builds":${c.cache.builds},"cache_hits":${c.cache.hits}""" +
+        s""","cache_build_ms":${c.cache.buildMs}}"""
     }
       .mkString("{", ",", "}")
     val qsFailedPasses = results.collect { case (k, st) if st.failedPasses > 0 =>

@@ -2,9 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import scala.collection.concurrent.TrieMap
-
-import graft.operators.LayoutStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -48,31 +45,8 @@ object Tables {
     * two lineitem sides) stay unambiguous. */
   private def schemaOf(spark: SparkSession, sfDir: String, name: String): StructType = {
     val confs = SchemaConfs.map(k => spark.conf.getOption(k).getOrElse("")).mkString(",")
-    derive(sfDir, name, s"schema[$confs]")(spark.read.parquet(s"$sfDir/$name.parquet").schema)
-  }
-
-  /** Values derived from one table's content (its schema, shard_routed's
-    * last seq), one entry per (absolute path, kind) holding the
-    * [[LayoutStore.fingerprint]] it was computed under: size plus md5 of
-    * the first and last 4 KiB, which covers the parquet footer, so any
-    * rewrite of the table recomputes. */
-  private val derived = TrieMap.empty[(String, String), (String, Any)]
-
-  def derive[T](sfDir: String, name: String, kind: String)(compute: => T): T = {
-    val file = s"$name.parquet"
-    val key = (Paths.get(sfDir, file).toAbsolutePath.normalize.toString, kind)
-    // fingerprint BEFORE computing: a rewrite racing the computation
-    // then stores a newer value under the older fingerprint, which the
-    // next call misses and recomputes — never an old value under a new
-    // fingerprint
-    val fp = LayoutStore.fingerprint(sfDir, Seq(file))
-    derived.get(key) match {
-      case Some((`fp`, v)) => v.asInstanceOf[T]
-      case _ =>
-        val v = compute
-        derived.put(key, (fp, v))
-        v
-    }
+    BuildCache("schema", BuildCache.files(spark, sfDir, s"$name.parquet"), confs)(
+      spark.read.parquet(s"$sfDir/$name.parquet").schema)
   }
 
   /** Legacy form: events.ts as ns-since-epoch long (TIMESTAMP(NANOS)

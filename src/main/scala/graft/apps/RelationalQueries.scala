@@ -69,19 +69,13 @@ object RelationalQueries extends QueryPack {
     sys.env.get("SPARK_GRAFT_REL_CONF_MIN_BYTES")
       .flatMap(_.toLongOption).getOrElse(200L << 20)
 
-  private val liBytesCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-
-  /** Bytes of `$dir/lineitem.parquet` (file or directory), memoized
-    * per dir — one driver-side FS stat per data directory per
-    * session. */
-  private def lineitemBytes(s: SparkSession, dir: String): Long =
-    liBytesCache.getOrElseUpdate(dir, {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/lineitem.parquet")
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      try fs.getContentSummary(p).getLength
-      catch { case scala.util.control.NonFatal(_) => 0L }
-    })
+  /** Bytes of `$dir/lineitem.parquet` (file or directory). */
+  private def lineitemBytes(s: SparkSession, dir: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(s"$dir/lineitem.parquet")
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    try fs.getContentSummary(p).getLength
+    catch { case scala.util.control.NonFatal(_) => 0L }
+  }
 
   /** [[withScopedConfs]] gated on [[RelConfMinBytes]] — identity (body
     * under session confs) below the floor. */

@@ -44,7 +44,7 @@ object KVQueries extends QueryPack {
     // shares its monoid with (graft.streaming.StreamReplay)
     "stream_state_replay" -> ((s, dir) =>
       graft.streaming.StreamReplay.stateReplay(ops(s, dir),
-        cacheKey = Some(dir)).orderBy("key")),
+        cached = true).orderBy("key")),
     // the PRODUCTION streaming sink under the gate: same replay, but
     // written through LiveKV.stateTableSink (shard-partitioned
     // incremental parquet state table, commit markers, per-shard GC)
@@ -52,7 +52,7 @@ object KVQueries extends QueryPack {
     // hash gate IS the state table, not a memory sink
     "stream_state_table" -> ((s, dir) =>
       graft.streaming.StreamReplay.stateTableReplay(ops(s, dir),
-        cacheKey = Some(dir)).orderBy("key")),
+        cached = true).orderBy("key")),
     // the IN-STREAM exactly-once gate (K4's streaming form) under the
     // hash gate: raw ops (dupes included) through streaming
     // dropDuplicates(clientId, reqId) across 4 seq-ordered micro-
@@ -63,7 +63,7 @@ object KVQueries extends QueryPack {
     // query gates the dedup state store itself.
     "stream_dedup" -> ((s, dir) =>
       graft.streaming.StreamReplay.dedupReplay(ops(s, dir),
-        cacheKey = Some(dir)).orderBy("client_id")),
+        cached = true).orderBy("client_id")),
     // SKEW under the gate: the op log with a planted hot key (~70% of
     // writes on "hot") folded by the two-phase SALTED replay — hot
     // keys split across seq-bucket sub-folds, then merged in bucket
@@ -136,7 +136,7 @@ object KVQueries extends QueryPack {
     // the outcomes watermark-lag-proof (see StreamReplay scaladoc).
     "stream_dedup_evict" -> ((s, dir) =>
       graft.streaming.StreamReplay.dedupEvictReplay(ops(s, dir),
-        cacheKey = Some(dir)).orderBy("client_id")),
+        cached = true).orderBy("client_id")),
     // SCD TYPE-2 history (the shardmaster time-travel idea at the KV
     // data plane): every write's validity interval on one key-
     // partitioned window pass; the open rows ARE kv_state (spec-pinned)

@@ -33,17 +33,6 @@ import org.apache.spark.sql.functions._
   */
 object BucketedTables {
 
-  /** (session, sfDir) -> (lineitem table name, orders table name). The
-    * in-session memo over the persisted layout (catalog registration
-    * is idempotent but not free). */
-  private val cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (String, String)]
-
-  /** Test hook: forget the in-session memo so a spec can prove the
-    * restart path (re-register from the persisted layout, zero
-    * rebuild). */
-  private[graft] def clearSessionCache(): Unit = cache.clear()
-
   /** Bucket count: sized to the join's target parallelism. The gate
     * data fits 8 buckets comfortably; at 100 TB this is thousands and
     * is chosen ONCE at ingest for the whole table lifetime. */
@@ -96,7 +85,8 @@ object BucketedTables {
     * suffixed: a regenerated source publishes under a fresh name, so a
     * stale layout can never serve). */
   def orderkeyBucketed(spark: SparkSession, sfDir: String): (String, String) =
-    cache.getOrElseUpdate((spark, sfDir), {
+    graft.BuildCache("orderkeyBucketed",
+        graft.BuildCache.files(spark, sfDir, "lineitem.parquet", "orders.parquet")) {
       // kind carries the layout FORMAT generation: v2 = one file per
       // bucket (see writeBucketed). Same SOURCE fingerprints exist
       // under the pre-r13 "bucketed" kind on hosts that built them —
@@ -120,7 +110,7 @@ object BucketedTables {
       register(spark, li, "l_orderkey", live.resolve("lineitem"))
       register(spark, ord, "o_orderkey", live.resolve("orders"))
       (li, ord)
-    })
+    }
 
   /** MERGE composed with the BUCKETED layout — [[MergeInto]]'s other
     * documented lever, gated (rel_merge_bucketed; the partitioned

@@ -68,10 +68,14 @@ object LayoutStore {
     * to sfDir, length, md5 of first+last 4 KiB). Directories
     * (multi-file parquet) fold in every regular file, sorted. No
     * mtimes — see the object scaladoc for the restore/trade analysis. */
-  def fingerprint(sfDir: String, sources: Seq[String]): String = {
-    val base = Paths.get(sfDir).toAbsolutePath.normalize
-    val parts = sources.flatMap { name =>
-      val f = Paths.get(sfDir, name)
+  def fingerprint(sfDir: String, sources: Seq[String]): String =
+    fingerprintFiles(Paths.get(sfDir), sources.map(Paths.get(sfDir, _)))
+
+  /** [[fingerprint]] of `paths`, each named relative to `base`; a
+    * directory folds in every regular file below it, sorted. */
+  def fingerprintFiles(base: Path, paths: Seq[Path]): String = {
+    val root = base.toAbsolutePath.normalize
+    val parts = paths.flatMap { f =>
       val files =
         if (Files.isDirectory(f)) {
           val s = Files.walk(f)
@@ -81,7 +85,7 @@ object LayoutStore {
           } finally s.close()
         } else Vector(f)
       files.map { p =>
-        val rel = base.relativize(p.toAbsolutePath.normalize)
+        val rel = root.relativize(p.toAbsolutePath.normalize)
         s"$rel:${Files.size(p)}:${contentTag(p)}"
       }
     }

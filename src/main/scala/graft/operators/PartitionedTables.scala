@@ -30,19 +30,12 @@ import org.apache.spark.sql.functions._
   */
 object PartitionedTables {
 
-  private val cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
-  /** Test hook: forget the in-session memo so a spec can prove the
-    * restart path (reload from the persisted layout, zero rebuild). */
-  private[graft] def clearSessionCache(): Unit = cache.clear()
-
   /** BUILD or reload: events as a date-partitioned parquet layout;
     * returns its path. Integer cents carried so serve aggregates are
     * exact. A session that finds the published layout pays only the
     * directory listing. */
   def eventsByDay(spark: SparkSession, sfDir: String): String =
-    cache.getOrElseUpdate((spark, sfDir), {
+    graft.BuildCache("eventsByDay", graft.BuildCache.files(spark, sfDir, "events.parquet")) {
       // kind carries a layout-schema version: the fingerprint names the
       // SOURCE, so a schema change to the layout itself must publish
       // under a fresh name or an old on-disk build would serve it
@@ -56,7 +49,7 @@ object PartitionedTables {
           .write.partitionBy("d").parquet(staging.resolve("events").toString)
       }
       live.resolve("events").toString
-    })
+    }
 
   /** MERGE composed with partition pruning — how Delta/Iceberg price a
     * MERGE, gated end-to-end (rel_merge_pruned; closes the r10 gap

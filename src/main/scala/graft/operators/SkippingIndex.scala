@@ -38,13 +38,6 @@ object SkippingIndex {
     * events dir. */
   final case class Zone(file: String, minUid: Long, maxUid: Long, rows: Long)
 
-  private val cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (String, Seq[Zone])]
-
-  /** Test hook: forget the in-session memo so a spec can prove the
-    * restart path (reload from the persisted layout, zero rebuild). */
-  private[graft] def clearSessionCache(): Unit = cache.clear()
-
   val NumFiles = 16
 
   /** BUILD or reload: the range-sorted layout + its manifest. Disk
@@ -52,7 +45,7 @@ object SkippingIndex {
     * (parquet). The manifest collect is bounded by the FILE count
     * (never the row count). */
   def eventsByUserRange(spark: SparkSession, sfDir: String): (String, Seq[Zone]) =
-    cache.getOrElseUpdate((spark, sfDir), {
+    graft.BuildCache("eventsByUserRange", graft.BuildCache.files(spark, sfDir, "events.parquet")) {
       val live = LayoutStore.getOrBuild(
         LayoutStore.layoutDir("skip_idx", sfDir, Seq("events.parquet"))) { staging =>
         val dir = staging.resolve("events").toString
@@ -69,7 +62,7 @@ object SkippingIndex {
           .write.parquet(staging.resolve("manifest").toString)
       }
       (live.resolve("events").toString, readManifest(spark, live.toString))
-    })
+    }
 
   /** Reload the zone manifest from its parquet — the snapshot read a
     * restarted driver does instead of re-scanning the corpus. */

@@ -36,13 +36,6 @@ object ZOrderIndex {
   final case class Zone2(file: String, minUid: Long, maxUid: Long,
       minDay: Int, maxDay: Int, rows: Long)
 
-  private val cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (String, Seq[Zone2])]
-
-  /** Test hook: forget the in-session memo so a spec can prove the
-    * restart path (reload from the persisted layout, zero rebuild). */
-  private[graft] def clearSessionCache(): Unit = cache.clear()
-
   val NumFiles = 16
 
   /** 32-bit Morton interleave of two 16-bit values — x in even bit
@@ -58,7 +51,7 @@ object ZOrderIndex {
     * is days since epoch (exact integer, matches DuckDB date
     * arithmetic). Disk layout: `<layout>/events` + `<layout>/manifest`. */
   def eventsByZOrder(spark: SparkSession, sfDir: String): (String, Seq[Zone2]) =
-    cache.getOrElseUpdate((spark, sfDir), {
+    graft.BuildCache("eventsByZOrder", graft.BuildCache.files(spark, sfDir, "events.parquet")) {
       val live = LayoutStore.getOrBuild(
         LayoutStore.layoutDir("zorder", sfDir, Seq("events.parquet"))) { staging =>
         val dir = staging.resolve("events").toString
@@ -82,7 +75,7 @@ object ZOrderIndex {
           .write.parquet(staging.resolve("manifest").toString)
       }
       (live.resolve("events").toString, readManifest(spark, live.toString))
-    })
+    }
 
   /** Reload the 2-D zone manifest from its parquet snapshot. */
   def readManifest(spark: SparkSession, layoutDir: String): Seq[Zone2] =

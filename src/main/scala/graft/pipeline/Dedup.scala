@@ -278,58 +278,39 @@ object Dedup {
     NearDupIndex(pairs, components(pairs))
   }
 
-  /** Session-scoped cache of [[nearDupIndex]] builds keyed by
-    * (session, corpus tag, k) — the "build once, query many" serve
-    * path for a long-lived driver running many curation reads over one
-    * corpus. Cleared by [[freeRetained]]: the cached tables are
-    * retained checkpoints, so freeing their blocks MUST invalidate the
-    * entries (a cleared checkpoint cannot be recomputed). */
-  private val indexCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Int), NearDupIndex]
-
-  def nearDupIndexCached(docs: DataFrame, tag: String, k: Int = 3): NearDupIndex =
-    indexCache.getOrElseUpdate((docs.sparkSession, tag, k), {
-      // build from the SHARED signature checkpoint (round 18): the
-      // default and b8 presets band the same signatures, so the
-      // per-corpus signature pass is paid once across both cached
-      // builds. Rows identical to nearDupIndex(docs, k) — same
-      // deterministic band join over the same signature values.
+  /** [[nearDupIndex]] as a [[graft.BuildCache]] entry — the build-once
+    * serve path for a driver running many curation reads over one
+    * corpus. Built from the shared signature table
+    * ([[signaturesCached]]), so every banding preset pays the
+    * signature pass once; rows identical to `nearDupIndex(docs, k)`.
+    * The cluster map is checkpointed sorted by doc_id: its scan keeps
+    * that ordering and partitioning, so a read ordered by doc_id plans
+    * neither an exchange nor a sort. */
+  def nearDupIndexCached(docs: DataFrame, k: Int = 3): NearDupIndex =
+    graft.BuildCache("nearDupIndex", graft.BuildCache.of(docs), k) {
       val pairs = retain(minhashCandidatesFromSig(
-        signaturesCached(docs, tag, k)).localCheckpoint(true))
-      NearDupIndex(pairs, components(pairs))
-    })
+        signaturesCached(docs, k)).localCheckpoint(true))
+      val comps = components(pairs)
+      val clusters = retain(sortedCheckpoint(comps, "doc_id"))
+      freeCheckpoint(comps)
+      NearDupIndex(pairs, clusters)
+    }
 
-  /** Session-scoped cache of the checkpointed SIGNATURE table per
-    * (session, corpus tag, k) — the shared prefix of every banding
-    * preset's cached build (round 18, VERDICT r17 #4: the b8 arm's
-    * cold x300 build paid 76 s re-computing signatures the default
-    * arm had already computed; banding is a row-local regroup of the
-    * mh columns, so the presets legitimately share this table).
-    * Retained-checkpoint lifecycle: [[freeRetained]]. */
-  private val sigCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Int), DataFrame]
-
-  private def signaturesCached(docs: DataFrame, tag: String, k: Int): DataFrame =
-    sigCache.getOrElseUpdate((docs.sparkSession, tag, k),
+  /** The checkpointed minhash SIGNATURE table — the prefix every
+    * banding preset's cached build shares (banding only regroups the
+    * mh columns). */
+  private def signaturesCached(docs: DataFrame, k: Int): DataFrame =
+    graft.BuildCache("minhashSignatures", graft.BuildCache.of(docs), k)(
       retain(minhashSignatures(docs, k).localCheckpoint(true)))
 
-  /** Session-scoped cache of the raw candidate-PAIR table per banding
-    * preset — the build-once serve path for NON-default bandings
-    * (e.g. the b8 recall-audit arm), which need the pairs but not the
-    * cluster map [[nearDupIndexCached]] also builds (the components
-    * fixpoint is eager and would be dead work). Round 17: the b8
-    * arm's inline `minhashCandidates(bandRows=1)` rebuild was the
-    * last big-rung spill in the repo (23.3 GB at x300) — serving the
-    * checkpointed pair table instead gives its warm passes read-path
-    * cost, the same stance as the default arm's [[NearDupIndex]]
-    * read. Retained-checkpoint lifecycle: [[freeRetained]]. */
-  private val pairsCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Int, Int), DataFrame]
-
-  def candidatePairsCached(docs: DataFrame, tag: String, k: Int = 3,
+  /** The raw candidate-PAIR table of one banding preset — the
+    * build-once serve path for NON-default bandings (e.g. the b8
+    * recall-audit arm), which need the pairs but not the cluster map
+    * [[nearDupIndexCached]] also builds. */
+  def candidatePairsCached(docs: DataFrame, k: Int = 3,
       bandRows: Int = BandRows): DataFrame =
-    pairsCache.getOrElseUpdate((docs.sparkSession, tag, k, bandRows),
-      retain(minhashCandidatesFromSig(signaturesCached(docs, tag, k),
+    graft.BuildCache("candidatePairs", graft.BuildCache.of(docs), k, bandRows)(
+      retain(minhashCandidatesFromSig(signaturesCached(docs, k),
         bandRows = bandRows).localCheckpoint(true)))
 
   /** Near-dup cluster-size histogram: how many clusters of each size
@@ -901,15 +882,35 @@ object Dedup {
     * second materialization, and [[freeCheckpoint]] on the view still
     * unpersists the shared blocks. */
   private[pipeline] def resetStats(ck: DataFrame): DataFrame =
+    rebuildScan(ck)((lr, spark) => new org.apache.spark.sql.execution.LogicalRDD(
+      lr.output, lr.rdd, lr.outputPartitioning, lr.outputOrdering,
+      lr.isStreaming, lr.stream)(spark, None, None))
+
+  /** `ck` over a rebuilt `LogicalRDD` — the same checkpointed RDD. */
+  private def rebuildScan(ck: DataFrame)(rebuild: (org.apache.spark.sql.execution.LogicalRDD,
+      org.apache.spark.sql.classic.SparkSession) => org.apache.spark.sql.execution.LogicalRDD)
+      : DataFrame =
     ck.queryExecution.logical match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         val spark = ck.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        val fresh = new org.apache.spark.sql.execution.LogicalRDD(
-          lr.output, lr.rdd, lr.outputPartitioning, lr.outputOrdering,
-          lr.isStreaming, lr.stream)(spark, None, None)
         new org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row](
-          spark, fresh, org.apache.spark.sql.Encoders.row(ck.schema))
+          spark, rebuild(lr, spark), org.apache.spark.sql.Encoders.row(ck.schema))
       case _ => ck
+    }
+
+  /** Eager checkpoint of `df` sorted by `key`, whose scan declares the
+    * sort's range partitioning and ordering, so a read ordered by `key`
+    * plans neither an exchange nor a sort. An adaptive plan reports
+    * neither property to `localCheckpoint`; the sort's output has both
+    * (AQE coalesces only adjacent ranges). */
+  private def sortedCheckpoint(df: DataFrame, key: String): DataFrame =
+    rebuildScan(df.orderBy(key).localCheckpoint(true)) { (lr, spark) =>
+      import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
+      val order = Seq(SortOrder(lr.output.find(_.name == key).get, Ascending))
+      new org.apache.spark.sql.execution.LogicalRDD(lr.output, lr.rdd,
+        org.apache.spark.sql.catalyst.plans.physical.RangePartitioning(
+          order, lr.rdd.getNumPartitions),
+        order, lr.isStreaming, lr.stream)(spark, Some(lr.computeStats()), Some(lr.constraints))
     }
 
   /** Eager localCheckpoint + [[resetStats]] — the per-round
@@ -956,31 +957,24 @@ object Dedup {
     * targets the RDD, not the Dataset wrapper: an internal retained
     * table (e.g. bpeApply's word table) drops its wrapper immediately
     * while its RDD stays reachable through every consumer plan — the
-    * RDD's reachability IS the lifetime the registry must observe. */
+    * RDD's reachability IS the lifetime the registry must observe.
+    * Inside a [[graft.BuildCache]] build the RDD is also released with
+    * the entry. */
   private[pipeline] def retain(df: DataFrame): DataFrame = synchronized {
     df.queryExecution.logical match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         retainedCps += scala.ref.WeakReference(lr.rdd)
+        graft.BuildCache.onFree(lr.rdd.unpersist(false))
       case _ => ()
     }
     df
   }
 
-  /** Free every still-reachable retained result checkpoint (see
-    * [[retainedCps]]); collected entries were (or will be) reclaimed
-    * by ContextCleaner. */
+  /** Free every [[graft.BuildCache]] entry and every still-reachable
+    * retained result checkpoint (see [[retainedCps]]); collected
+    * entries were (or will be) reclaimed by ContextCleaner. */
   def freeRetained(): Unit = synchronized {
-    // serve-path caches hold retained checkpoints whose blocks are
-    // about to be freed — a cleared eager checkpoint cannot be read or
-    // recomputed, so the cache entries must go with the blocks
-    indexCache.clear()
-    pairsCache.clear()
-    sigCache.clear()
-    spanCache.clear()
-    Similarity.clearIndexCaches()
-    TextAnalysis.clearCaches()
-    // the spread memo keys on corpus plans that die with the rung
-    Spread.clearCache()
+    graft.BuildCache.clear()
     // best-effort per RDD: retention is hygiene, not correctness — an
     // unpersist can NPE on a context mid-teardown (the BlockManager
     // master endpoint nulls before SparkContext.stop completes), and
@@ -1350,7 +1344,7 @@ object Dedup {
   }
 
   /** Persist a [[NearDupIndex]] as parquet tables — the cross-SESSION
-    * form of the build-serve split (the session cache amortizes within
+    * form of the build-serve split ([[graft.BuildCache]] amortizes within
     * a driver; a 100 TB build amortizes across drivers by living on
     * disk, the same stance as the IVF index's disk round-trip). */
   def writeNearDupIndex(idx: NearDupIndex, dir: String): Unit = {
@@ -1392,15 +1386,10 @@ object Dedup {
       maxDf: Long = MaxShingleDf): DataFrame =
     retain(spanPairs(docs, k, minRun, maxDf).localCheckpoint(true))
 
-  /** Session-scoped cache of [[spanIndex]] builds keyed by (session,
-    * corpus tag, k, minRun, maxDf) — same contract as
-    * [[nearDupIndexCached]]; cleared by [[freeRetained]]. */
-  private val spanCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Int, Int, Long), DataFrame]
-
-  def spanIndexCached(docs: DataFrame, tag: String, k: Int = 3, minRun: Int = 10,
+  /** [[spanIndex]] as a [[graft.BuildCache]] entry. */
+  def spanIndexCached(docs: DataFrame, k: Int = 3, minRun: Int = 10,
       maxDf: Long = MaxShingleDf): DataFrame =
-    spanCache.getOrElseUpdate((docs.sparkSession, tag, k, minRun, maxDf),
+    graft.BuildCache("spanIndex", graft.BuildCache.of(docs), k, minRun, maxDf)(
       spanIndex(docs, k, minRun, maxDf))
 
   /** Span REMOVAL — the curation step [[spanPairs]] exists for (the

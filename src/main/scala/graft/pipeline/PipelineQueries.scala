@@ -20,23 +20,23 @@ object PipelineQueries extends QueryPack {
   private def docs(s: SparkSession, dir: String) = Tables.documents(s, dir)
   private def emb(s: SparkSession, dir: String) = Tables.embeddings(s, dir)
 
-  /** Session-cached build-once near-dup index ([[Dedup.nearDupIndex]]):
-    * the cluster map and candidate pairs are built once per (session,
-    * corpus) and every dependent query below serves from the artifact —
+  /** Build-once near-dup index ([[Dedup.nearDupIndexCached]]): the
+    * cluster map and candidate pairs are built once per corpus and
+    * every dependent query below serves from the artifact —
     * the production stance (at 100 TB the fixpoint is hours; cluster
     * sizes, keep-best, splits and audits are READS of its output).
     * Results are identical to the train-inline forms (the build is
     * deterministic); PipelineSpec pins that identity. */
-  private def ndIdx(s: SparkSession, d: String) = Dedup.nearDupIndexCached(docs(s, d), d)
+  private def ndIdx(s: SparkSession, d: String) = Dedup.nearDupIndexCached(docs(s, d))
 
-  /** Session-cached build-once SPAN index ([[Dedup.spanIndexCached]]):
-    * the positional-shingle span table is built once per (session,
-    * corpus) and span removal + coverage serve from it — at 100 TB the
+  /** Build-once SPAN index ([[Dedup.spanIndexCached]]): the
+    * positional-shingle span table is built once per corpus and span
+    * removal + coverage serve from it — at 100 TB the
     * span self-join is the costliest dedup build in the shop and both
     * consumers are reads of its output. dedup_spans keeps the
     * train-inline build (oracle bit-parity); PipelineSpec pins the
     * inline == FromIndex identity. */
-  private def spanIdx(s: SparkSession, d: String) = Dedup.spanIndexCached(docs(s, d), d)
+  private def spanIdx(s: SparkSession, d: String) = Dedup.spanIndexCached(docs(s, d))
 
   /** Fixed query terms for text_bm25 — mid-frequency corpus words so
     * tf, df and doc-length normalization all do real work. */
@@ -68,7 +68,7 @@ object PipelineQueries extends QueryPack {
     // round 17, killing the arm's last x300 rebuild spill.
     "dedup_lsh_recall_b8" -> ((s, d) =>
       Dedup.lshRecall(docs(s, d), bandRows = 1,
-        caughtPairs = Some(Dedup.candidatePairsCached(docs(s, d), d, bandRows = 1)))
+        caughtPairs = Some(Dedup.candidatePairsCached(docs(s, d), bandRows = 1)))
         .orderBy("decile")),
     // cross-source near-dup overlap matrix (mirror detection), served
     // from the build-once pair table
@@ -96,13 +96,13 @@ object PipelineQueries extends QueryPack {
     // identity spec-pinned)
     "emb_pca2" -> ((s, d) =>
       Similarity.pcaTop2FromIndex(
-        Similarity.scatterMatrixCached(emb(s, d), d),
-        Similarity.pcaTopCached(emb(s, d), d))),
+        Similarity.scatterMatrixCached(emb(s, d)),
+        Similarity.pcaTopCached(emb(s, d)))),
     // per-vector coordinate along the component, served from the
-    // session-cached build-once artifact (emb_pca keeps the inline
+    // build-once artifact (emb_pca keeps the inline
     // build its unrolled oracle replays; rows identical)
     "emb_pca_project" -> ((s, d) =>
-      Similarity.pcaProjectFromIndex(Similarity.pcaTopCached(emb(s, d), d), emb(s, d))
+      Similarity.pcaProjectFromIndex(Similarity.pcaTopCached(emb(s, d)), emb(s, d))
         .orderBy("vec_id")),
     "dedup_jaccard" -> ((s, d) => Dedup.jaccardPairs(docs(s, d)).orderBy("doc_a", "doc_b")),
     "dedup_simhash" -> ((s, d) => Dedup.simhashGroups(docs(s, d)).orderBy("fp")),
@@ -110,7 +110,7 @@ object PipelineQueries extends QueryPack {
     // embedding near-dup pairs, served from the build-once ANN pair
     // table (sim_ann_pairs keeps the train-inline build)
     "dedup_embedding" -> ((s, d) =>
-      Dedup.embeddingNearDupsFromPairs(docs(s, d), Similarity.annPairsCached(emb(s, d), d))
+      Dedup.embeddingNearDupsFromPairs(docs(s, d), Similarity.annPairsCached(emb(s, d)))
         .orderBy("doc_a", "doc_b")),
     // substring-level dedup: maximal shared token runs between doc
     // pairs (diagonal gaps-and-islands over the positional shingle
@@ -216,12 +216,12 @@ object PipelineQueries extends QueryPack {
     "pipeline_pack" -> ((s, d) => Curation.packSequences(docs(s, d)).orderBy("doc_id")),
     // tokenizer-true packing: the BPE-trained subword counts drive the
     // layout (training budgets are model tokens, not whitespace
-    // words); reads the session-cached tokenizer artifact — the merge
+    // words); reads the cached tokenizer artifact — the merge
     // loop trains once per corpus, text_bpe_apply keeps the inline
     // build its unrolled oracle replays
     "pipeline_pack_bpe" -> ((s, d) =>
       Curation.packSequencesBy(
-        TextAnalysis.bpeApplyCached(docs(s, d), d, 3)
+        TextAnalysis.bpeApplyCached(docs(s, d), 3)
           .select(col("doc_id"), col("n_bpe_tokens").as("n_tokens")))
         .orderBy("doc_id")),
     // deterministic train/val/test assignment (pure function of
@@ -349,7 +349,7 @@ object PipelineQueries extends QueryPack {
     // integer-exact PageRank over the symmetrized ANN pair graph,
     // served from the build-once pair table
     "graph_pagerank" -> ((s, d) =>
-      Graph.similarityCentralityFromPairs(emb(s, d), Similarity.annPairsCached(emb(s, d), d))
+      Graph.similarityCentralityFromPairs(emb(s, d), Similarity.annPairsCached(emb(s, d)))
         .orderBy("vec_id")),
     // per-doc top-5 keywords by quantized tf-idf
     "text_tfidf" -> ((s, d) =>
@@ -369,7 +369,7 @@ object PipelineQueries extends QueryPack {
     // semantic dedup plane, like dedup_components for the text plane)
     "dedup_embedding_components" -> ((s, d) =>
       Dedup.components(
-        Dedup.embeddingNearDupsFromPairs(docs(s, d), Similarity.annPairsCached(emb(s, d), d))
+        Dedup.embeddingNearDupsFromPairs(docs(s, d), Similarity.annPairsCached(emb(s, d)))
           .select("doc_a", "doc_b"))
         .orderBy("doc_id")),
     // per-source crawl audit + the anti-spam per-source cap
@@ -444,7 +444,7 @@ object PipelineQueries extends QueryPack {
     // corpus); sim_ivf_kmeans keeps the train-inline build its
     // unrolled oracle replays
     "sim_ivf_serve" -> ((s, d) => {
-      val (assign, cent) = Similarity.ivfKmeansIndexCached(emb(s, d), d)
+      val (assign, cent) = Similarity.ivfKmeansIndexCached(emb(s, d))
       Similarity.ivfTopKNprobe(assign, cent, 0L to 9L, 5, Similarity.KmeansNprobe)
         .orderBy("probe_id", "rank")
     }),
@@ -457,12 +457,12 @@ object PipelineQueries extends QueryPack {
     // the unrolled SQL oracle replays bit-for-bit. Results are
     // identical (deterministic build), so they share that oracle.
     "sim_pq_serve" -> ((s, d) => {
-      val (cb, codes) = Similarity.pqIndexCached(emb(s, d), d)
+      val (cb, codes) = Similarity.pqIndexCached(emb(s, d))
       Similarity.pqTopKFromIndex(emb(s, d), cb, codes, 0L to 9L, 5)
         .orderBy("probe_id", "rank")
     }),
     "sim_ivfpq_serve" -> ((s, d) => {
-      val (cent, cb, ccodes) = Similarity.ivfPqIndexCached(emb(s, d), d)
+      val (cent, cb, ccodes) = Similarity.ivfPqIndexCached(emb(s, d))
       Similarity.ivfPqTopKFromIndex(emb(s, d), cent, cb, ccodes, 0L to 9L, 5)
         .orderBy("probe_id", "rank")
     }),
@@ -479,23 +479,23 @@ object PipelineQueries extends QueryPack {
     // the quantizer trained on the first 400 only — the no-retrain
     // append path (frozen centroids ride the cached base index)
     "sim_ivf_append" -> ((s, d) =>
-      Similarity.ivfAppendAssign(emb(s, d), d, 400L).orderBy("vec_id")),
+      Similarity.ivfAppendAssign(emb(s, d), 400L).orderBy("vec_id")),
     // the append path's drift audit: per-cell base vs batch occupancy
     // (integer basis points) — the evidence that triggers a quantizer
     // re-train
     "sim_ivf_drift" -> ((s, d) =>
-      Similarity.ivfAppendDrift(emb(s, d), d, 400L).orderBy("cell")),
+      Similarity.ivfAppendDrift(emb(s, d), 400L).orderBy("cell")),
     // ADC quantization-error audit: ADC vs exact cosine per probe over
     // the whole corpus, 1e-6-quantized errors (the code-budget sizing
     // knob; serves from the cached PQ index)
     "sim_pq_err" -> ((s, d) =>
-      Similarity.pqAdcErrors(emb(s, d), d, 0L to 9L).orderBy("probe_id")),
+      Similarity.pqAdcErrors(emb(s, d), 0L to 9L).orderBy("probe_id")),
     // SEMANTIC dedup (SemDeDup): within-cell epsilon-ball marking over
     // the build-once k-means assignment — pairwise cosine among cell
     // members only; drop iff a smaller-id in-cell neighbor sits at
     // cos >= 0.3 (the deterministic, engine-replayable tiebreak)
     "dedup_semantic" -> ((s, d) =>
-      Similarity.semanticDedup(emb(s, d), d).orderBy("vec_id")),
+      Similarity.semanticDedup(emb(s, d)).orderBy("vec_id")),
     "mm_kind_stats" -> ((s, d) => Multimodal.kindStats(docs(s, d)).orderBy("kind")),
     // Decode path: kind=image tries the REAL javax.imageio codec; the
     // synthetic payloads here are text bytes (no image header), so

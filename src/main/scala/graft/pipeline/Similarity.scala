@@ -306,26 +306,8 @@ object Similarity {
   def estimatedLshRecall(planes: Int, families: Int, s: Double): Double =
     1.0 - math.pow(1.0 - math.pow(s, planes.toDouble), families.toDouble)
 
-  /** Memoized corpus cardinality, keyed by (session, CANONICALIZED
-    * logical plan) — the same corpus expression counts once per
-    * session, then every [[annPairsAdaptive]] call (embedding
-    * near-dups, similarity centrality, the gated pair query — several
-    * per bench pass) is sizing-action-free (r13 advice: the per-call
-    * count() added input bytes/tasks to the adaptive side of the very
-    * byte ladder the feature is measured by). Plan-keyed rather than
-    * tag-keyed so no call-site threading is needed; like every
-    * session cache here it assumes the corpus behind a plan is
-    * immutable for the session (the testdata/lake contract — at
-    * 100 TB catalog statistics supply the count with no action at
-    * all). */
-  private val corpusNCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan), Long]
-
-  def corpusN(emb: DataFrame): Long =
-    corpusNCache.getOrElseUpdate(
-      (emb.sparkSession, emb.queryExecution.analyzed.canonicalized),
-      emb.select("vec_id").count())
+  /** The corpus row count, memoized ([[Spread.memoCount]]). */
+  def corpusN(emb: DataFrame): Long = Spread.memoCount(emb, "vec_id")
 
   /** [[annPairs]] with corpus-sized signatures ([[adaptiveLshParams]]).
     * The corpus count rides the session memo ([[corpusN]]). */
@@ -786,7 +768,7 @@ object Similarity {
     * to the train-inline form (all-integer arithmetic; PipelineSpec
     * pins the identity), so the unrolled DuckDB oracle replays it
     * exactly. Neither input artifact is freed here — they belong to
-    * the session caches ([[Dedup.freeRetained]] lifecycle). */
+    * [[graft.BuildCache]]. */
   def pcaTop2FromIndex(mm: DataFrame, v1Dim: DataFrame, iters: Int = 5): DataFrame = {
     val v1 = v1Dim.select(col("dim").cast("int").as("k"), col("v"))
     val m2 = deflate(mm, v1)
@@ -796,35 +778,21 @@ object Similarity {
       .select(col("k").cast("long").as("dim"), col("v")).orderBy("dim")
   }
 
-  private val pcaCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Int), DataFrame]
-  private val gramCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), DataFrame]
+  /** [[scatterMatrix]] as a [[graft.BuildCache]] entry — the d²-row
+    * Gram matrix is the expensive half of EVERY eigen-pass, and both
+    * components (and any future one) iterate over it. */
+  def scatterMatrixCached(emb: DataFrame): DataFrame =
+    graft.BuildCache("scatterMatrix", graft.BuildCache.of(emb))(Dedup.retain(scatterMatrix(emb)))
 
-  /** Session-cached [[scatterMatrix]] — the d²-row Gram artifact
-    * itself as a build-once table: at corpus scale the N·d² aggregate
-    * is the expensive half of EVERY eigen-pass, and both components
-    * (and any future one) are iterations over the same matrix. Cleared
-    * by [[Dedup.freeRetained]] with the rest of the retained
-    * checkpoints. */
-  def scatterMatrixCached(emb: DataFrame, tag: String): DataFrame =
-    gramCache.getOrElseUpdate((emb.sparkSession, tag), Dedup.retain(scatterMatrix(emb)))
-
-  /** Session-cached [[pcaTop]] — the component as a build-once
-    * artifact (the ivfIndex stance): serve-path consumers like
-    * [[pcaProject]] read it instead of re-running the Gram build +
-    * power iteration per query. Builds from [[scatterMatrixCached]],
-    * so the Gram cost is shared with the deflation serve path
-    * ([[pcaTop2FromIndex]]). `iters` is part of the key (a second call
-    * with different rounds is a different artifact); `tag` must
-    * uniquely identify the embedding DATASET — the cache trusts it,
-    * exactly like the other index caches. */
-  def pcaTopCached(emb: DataFrame, tag: String, iters: Int = 5): DataFrame =
-    pcaCache.getOrElseUpdate((emb.sparkSession, tag, iters), {
-      val v = powerIterate(scatterMatrixCached(emb, tag), iters)
+  /** [[pcaTop]] as a [[graft.BuildCache]] entry, built from
+    * [[scatterMatrixCached]] so the Gram cost is shared with the
+    * deflation serve path ([[pcaTop2FromIndex]]). */
+  def pcaTopCached(emb: DataFrame, iters: Int = 5): DataFrame =
+    graft.BuildCache("pcaTop", graft.BuildCache.of(emb), iters) {
+      val v = powerIterate(scatterMatrixCached(emb), iters)
       Dedup.retain(v)
         .select(col("k").cast("long").as("dim"), col("v")).orderBy("dim")
-    })
+    }
 
   /** Every vector's coordinate along the [[pcaTop]] axis — the serve
     * use of the component (1-D sharding key, skew diagnostics, quick
@@ -1092,28 +1060,14 @@ object Similarity {
     } finally qv.unpersist(false)
   }
 
-  /** Session-scoped serve-path caches of the [[pqIndex]] /
-    * [[ivfPqIndex]] builds keyed by (session, corpus tag) — the
-    * "build once, query many" production shape: Lloyd training and
-    * encoding run once per corpus, every top-k after that is pure ADC
-    * serving against the cached artifact. Codebooks/centroids are
-    * driver-localized tables; the code tables are retained
-    * checkpoints, so the caches are cleared by [[Dedup.freeRetained]]
-    * together with the blocks they point at. */
-  private val pqCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), (DataFrame, DataFrame)]
-  private val ivfPqCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), (DataFrame, DataFrame, DataFrame)]
-  private val ivfKmCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), (DataFrame, DataFrame)]
-  private val annPairsCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), DataFrame]
+  /** [[pqIndex]] / [[ivfPqIndex]] as [[graft.BuildCache]] entries —
+    * Lloyd training and encoding run once per corpus, every top-k
+    * after that is pure ADC serving against the cached artifact. */
+  def pqIndexCached(emb: DataFrame): (DataFrame, DataFrame) =
+    graft.BuildCache("pqIndex", graft.BuildCache.of(emb))(pqIndex(emb))
 
-  def pqIndexCached(emb: DataFrame, tag: String): (DataFrame, DataFrame) =
-    pqCache.getOrElseUpdate((emb.sparkSession, tag), pqIndex(emb))
-
-  def ivfPqIndexCached(emb: DataFrame, tag: String): (DataFrame, DataFrame, DataFrame) =
-    ivfPqCache.getOrElseUpdate((emb.sparkSession, tag), ivfPqIndex(emb))
+  def ivfPqIndexCached(emb: DataFrame): (DataFrame, DataFrame, DataFrame) =
+    graft.BuildCache("ivfPqIndex", graft.BuildCache.of(emb))(ivfPqIndex(emb))
 
   /** K-means IVF index as a build-once pair (cell assignment table,
     * localized centroid table) — the serve path behind sim_ivf_serve:
@@ -1128,18 +1082,17 @@ object Similarity {
     } finally qv.unpersist(false)
   }
 
-  def ivfKmeansIndexCached(emb: DataFrame, tag: String): (DataFrame, DataFrame) =
-    ivfKmCache.getOrElseUpdate((emb.sparkSession, tag), ivfKmeansIndex(emb))
+  def ivfKmeansIndexCached(emb: DataFrame): (DataFrame, DataFrame) =
+    graft.BuildCache("ivfKmeansIndex", graft.BuildCache.of(emb))(ivfKmeansIndex(emb))
 
   /** The ANN candidate-pair table as a build-once artifact (default
-    * threshold, CORPUS-SIZED signatures — [[annPairsAdaptive]], the
-    * round-13 production default: bit-identical to the fixed width at
-    * gate corpus sizes, linear candidate volume beyond them): consumed
-    * by the embedding dedup family and similarity centrality the way
-    * [[Dedup.nearDupIndex]].pairs is by the text plane — the banded
-    * self-join runs once per corpus, every reader prices as a read. */
-  def annPairsCached(emb: DataFrame, tag: String): DataFrame =
-    annPairsCache.getOrElseUpdate((emb.sparkSession, tag),
+    * threshold, corpus-sized signatures — [[annPairsAdaptive]]):
+    * consumed by the embedding dedup family and similarity centrality
+    * the way [[Dedup.nearDupIndex]].pairs is by the text plane — the
+    * banded self-join runs once per corpus, every reader prices as a
+    * read. */
+  def annPairsCached(emb: DataFrame): DataFrame =
+    graft.BuildCache("annPairs", graft.BuildCache.of(emb))(
       Dedup.retain(annPairsAdaptive(emb).localCheckpoint(true)))
 
   /** SEMANTIC deduplication (SemDeDup, Abbas et al. 2023,
@@ -1169,10 +1122,10 @@ object Similarity {
     * members report status "mega": membership is the signal, pairwise
     * balls are not computed (re-cluster with larger k, the production
     * response). The cap never binds at a healthy k ~ N/target. */
-  def semanticDedup(emb: DataFrame, tag: String, minCos: Double = AnnThreshold,
+  def semanticDedup(emb: DataFrame, minCos: Double = AnnThreshold,
       maxCell: Long = Dedup.MaxBandBucket): DataFrame = {
     val spark = emb.sparkSession
-    val (assign, _) = ivfKmeansIndexCached(emb, tag)
+    val (assign, _) = ivfKmeansIndexCached(emb)
     val overCap = assign.groupBy("cell").agg(count(lit(1)).as("cell_n"))
       .filter(col("cell_n") > maxCell).select("cell")
     val a = assign.select(col("vec_id"), col("cell"), col("q"), col("n2"))
@@ -1248,16 +1201,6 @@ object Similarity {
   def readIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String): (DataFrame, DataFrame) =
     (spark.read.parquet(s"$dir/assign"), spark.read.parquet(s"$dir/centroids"))
 
-  private[pipeline] def clearIndexCaches(): Unit = {
-    pqCache.clear()
-    ivfPqCache.clear()
-    ivfKmCache.clear()
-    annPairsCache.clear()
-    pcaCache.clear()
-    gramCache.clear()
-    corpusNCache.clear()
-  }
-
   /** ADC top-k served from a prebuilt [[pqIndex]]: probes re-quantize
     * from `emb` at full precision (asymmetric distance), the per-probe
     * LUT is probes x PqM x PqK rows against the broadcast codebook,
@@ -1299,9 +1242,9 @@ object Similarity {
     * the quantizer is re-trained only when drift audits (the recall
     * queries) say so. Mirrors the dedup plane's batch-vs-base
     * incremental forms. Output: (vec_id, cell) for the new batch. */
-  def ivfAppendAssign(emb: DataFrame, tag: String, newMin: Long): DataFrame = {
+  def ivfAppendAssign(emb: DataFrame, newMin: Long): DataFrame = {
     val base = emb.filter(col("vec_id") < newMin)
-    val (_, cent) = ivfKmeansIndexCached(base, s"${tag}_base$newMin")
+    val (_, cent) = ivfKmeansIndexCached(base)
     val newQ = quantized(emb.filter(col("vec_id") >= newMin))
     assignCells(newQ, cent)
       .select(col("vec_id"), col("cell").cast("long").as("cell"))
@@ -1315,12 +1258,12 @@ object Similarity {
     * new-share runs far from the batch/corpus ratio are distribution
     * drift — the production response is re-training the quantizer,
     * and this table is the evidence that triggers it. */
-  def ivfAppendDrift(emb: DataFrame, tag: String, newMin: Long): DataFrame = {
+  def ivfAppendDrift(emb: DataFrame, newMin: Long): DataFrame = {
     val base = emb.filter(col("vec_id") < newMin)
-    val (assignBase, _) = ivfKmeansIndexCached(base, s"${tag}_base$newMin")
+    val (assignBase, _) = ivfKmeansIndexCached(base)
     val baseCnt = assignBase
       .groupBy(col("cell").cast("long").as("cell")).agg(count(lit(1)).as("n_base"))
-    val newCnt = ivfAppendAssign(emb, tag, newMin)
+    val newCnt = ivfAppendAssign(emb, newMin)
       .groupBy("cell").agg(count(lit(1)).as("n_new"))
     baseCnt.join(newCnt, Seq("cell"), "full_outer")
       .select(col("cell"),
@@ -1340,9 +1283,9 @@ object Similarity {
     * max|err| in 1e-6 units. The ADC side serves from the cached
     * [[pqIndexCached]] artifact; the exact side is the same
     * probes-broadcast brute-force pass sim_topk prices. */
-  def pqAdcErrors(emb: DataFrame, tag: String, probeIds: Seq[Long]): DataFrame = {
+  def pqAdcErrors(emb: DataFrame, probeIds: Seq[Long]): DataFrame = {
     val spark = emb.sparkSession
-    val (cb, codes) = pqIndexCached(emb, tag)
+    val (cb, codes) = pqIndexCached(emb)
     val qv = quantized(emb)
     val lut = qv
       .filter(col("vec_id").isin(probeIds: _*))
@@ -1519,7 +1462,7 @@ object Similarity {
     val live = graft.operators.LayoutStore.getOrBuild(
       graft.operators.LayoutStore.layoutDir("ivfpq_cells", sfDir,
         Seq("embeddings.parquet"))) { staging =>
-      val (cent, cb, ccodes) = ivfPqIndexCached(emb, sfDir)
+      val (cent, cb, ccodes) = ivfPqIndexCached(emb)
       cent.coalesce(1).write.parquet(staging.resolve("centroids").toString)
       cb.coalesce(1).write.parquet(staging.resolve("codebook").toString)
       ccodes.write.partitionBy("cell").parquet(staging.resolve("codes").toString)

@@ -128,24 +128,13 @@ object Spread {
     * triple, one plane later. */
   val SigVecsPerPart = 5000L
 
-  /** Memoized exact row count of a compact table — partitioning
-    * INPUT, so it must be exact (Catalyst size estimates multiply
-    * through derived plans: a test corpus built by transforms claimed
-    * 3.9 GB and derived a 62k-partition shuffle) but must not re-run
-    * per plan build (a per-call count() scanned the id column on
-    * every bench pass; the round-16 BenchDiff gate caught the +27%
-    * input on sim_pq_topk). Plan-keyed like [[Similarity.corpusN]] —
-    * no call-site threading; assumes the corpus behind a plan is
-    * immutable for the session (the testdata/lake contract — at
-    * 100 TB catalog statistics supply the count with no action). */
-  private val nCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan), Long]
-
+  /** Exact row count of a compact table, a [[graft.BuildCache]] entry —
+    * partitioning INPUT, so it must be exact (Catalyst size estimates
+    * multiply through derived plans: a test corpus built by transforms
+    * claimed 3.9 GB and derived a 62k-partition shuffle) but must not
+    * re-run per plan build. */
   def memoCount(df: DataFrame, idCol: String): Long =
-    nCache.getOrElseUpdate(
-      (df.sparkSession, df.queryExecution.analyzed.canonicalized),
-      df.select(idCol).count())
+    graft.BuildCache("rowCount", graft.BuildCache.of(df))(df.select(idCol).count())
 
   /** Partition count the spread (and any downstream keyed repartition
     * sharing its scale) should use: ~1 partition per `rowsPerPart`
@@ -202,6 +191,4 @@ object Spread {
     * at every scale. */
   def anchorByKey(df: DataFrame, n: Long, rowsPerPart: Long, keys: Column*): DataFrame =
     df.repartition(parts(df, n, rowsPerPart), keys: _*)
-
-  private[pipeline] def clearCache(): Unit = nCache.clear()
 }

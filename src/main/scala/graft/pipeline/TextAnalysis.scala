@@ -108,20 +108,12 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_words"), sum("n_sub").as("n_bpe_tokens"))
   }
 
-  /** Session-cached [[bpeApply]] — the tokenizer as a build-once
-    * artifact: the merge loop trains once per (session, corpus, iters)
-    * and every token-budget consumer (sequence packing, mixture
-    * targets) reads the same per-doc counts, exactly how a production
-    * pipeline treats its tokenizer. The cached plan reads the retained
-    * per-word checkpoint, so [[Dedup.freeRetained]] clears this cache
-    * together with the blocks. */
-  def bpeApplyCached(docs: DataFrame, tag: String, iters: Int = 3): DataFrame =
-    bpeApplyCache.getOrElseUpdate((docs.sparkSession, tag, iters), bpeApply(docs, iters))
-
-  private val bpeApplyCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Int), DataFrame]
-
-  private[pipeline] def clearCaches(): Unit = bpeApplyCache.clear()
+  /** [[bpeApply]] as a [[graft.BuildCache]] entry — the tokenizer as a
+    * build-once artifact: the merge loop trains once per corpus and
+    * every token-budget consumer (sequence packing, mixture targets)
+    * reads the same per-doc counts. */
+  def bpeApplyCached(docs: DataFrame, iters: Int = 3): DataFrame =
+    graft.BuildCache("bpeApply", graft.BuildCache.of(docs), iters)(bpeApply(docs, iters))
 
   /** The shared merge loop: returns the final (word, freq, pos, s)
     * symbol table — still persisted; the caller frees it — plus one

@@ -19,7 +19,8 @@ object ShardQueries extends QueryPack {
   private def opsAndHistory(s: SparkSession, dir: String) = {
     val ops = OpLog.fromEvents(Tables.events(s, dir))
     // the last seq depends only on the events file: one job per content
-    val maxSeq = Tables.derive(dir, "events", "maxSeq")(ops.agg(max("seq")).head().getLong(0))
+    val maxSeq = graft.BuildCache("maxSeq", graft.BuildCache.files(s, dir, "events.parquet"))(
+      ops.agg(max("seq")).head().getLong(0))
     (ops, Reshard.steppedHistory(maxSeq, EpochLen))
   }
 

@@ -46,12 +46,12 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   *
   * Every replay drains through one path ([[drain]], or [[run]] for the
   * two replays whose sink is not a memory sink). Fixtures — bucket
-  * files that are a pure function of sfDir — are built once per
-  * session per (sfDir, content kind) and cached ([[cachedFixture]]), so
-  * a repeated call times only the drain: source admission, state-store
-  * commits and the sink, the cost a production deployment with a
-  * standing log pays. Replays over caller-supplied op logs keep
-  * per-invocation fixtures unless the caller vouches for a cache key.
+  * files that are a pure function of the events table — are built once
+  * per content kind and cached ([[cachedFixture]]), so a repeated call
+  * times only the drain: source admission, state-store commits and the
+  * sink, the cost a production deployment with a standing log pays.
+  * Replays over caller-supplied op logs keep per-invocation fixtures
+  * unless the caller asks for a cached one.
   */
 object StreamReplay {
 
@@ -202,7 +202,7 @@ object StreamReplay {
   private def eventFixture(spark: SparkSession, sfDir: String, kind: String, nSlices: Int)(
       project: DataFrame => DataFrame)(
       frames: (DataFrame, Long, Long, Column) => Seq[DataFrame]): Path =
-    cachedFixture(sfDir, kind) { inDir =>
+    cachedFixture(kind, graft.BuildCache.files(spark, sfDir, "events.parquet")) { inDir =>
       val e = project(graft.Tables.events(spark, sfDir)).localCheckpoint(true)
       val r = e.agg(min("tsu"), max("tsu")).head()
       val (lo, hi) = (r.getLong(0), r.getLong(1))
@@ -544,14 +544,12 @@ object StreamReplay {
       "complete", statePartitionsFor(sfDir))(identity)
   }
 
-  /** Cached fixture roots, keyed (sfDir or cache key, content kind).
-    * Cached roots are deleted by a JVM shutdown hook or by
-    * [[dropCachedFixtures]]; the per-drain scratch (checkpoints,
-    * sinks) stays per-invocation — that is the OPERATOR cost a bench
-    * measures, while in production the source is a standing log and a
-    * per-query fixture write is pure harness. */
-  private val fixtureCache =
-    new scala.collection.concurrent.TrieMap[(String, String), Path]()
+  /** Roots of the cached fixtures, deleted when their
+    * [[graft.BuildCache]] entry is freed or, failing that, by a JVM
+    * shutdown hook. The per-drain scratch (checkpoints, sinks) stays
+    * per-invocation — that is the OPERATOR cost a bench measures,
+    * while in production the source is a standing log and a per-query
+    * fixture write is pure harness. */
   private val fixtureRoots =
     new java.util.concurrent.ConcurrentLinkedQueue[Path]()
   locally {
@@ -561,37 +559,23 @@ object StreamReplay {
     }))
   }
 
-  /** Build the bucket dir for (sfDir, kind) once per session; later
-    * calls serve the cached dir. `kind` names the bucket CONTENT
-    * (projection + slicing + batch count) — two replays may share a
-    * kind only when their buckets are row-identical (windowedReplay /
-    * ivmReplay, and the three ordered interval-join drains, do).
-    * Only for fixtures that are a pure function of sfDir — replays
-    * taking caller-supplied datasets (the op-log family) stay
-    * per-invocation. */
-  private def cachedFixture(sfDir: String, kind: String)(build: Path => Unit): Path =
-    fixtureCache.getOrElseUpdate((sfDir, kind), {
+  /** The bucket dir of `kind` built from `input`, a [[graft.BuildCache]]
+    * entry. `kind` names the bucket CONTENT (projection + slicing +
+    * batch count) — two replays may share a kind only when their
+    * buckets are row-identical (windowedReplay / ivmReplay, and the
+    * three ordered interval-join drains, do). */
+  private def cachedFixture(kind: String, input: graft.BuildCache.Input)(
+      build: Path => Unit): Path =
+    graft.BuildCache("streamFixture", input, kind) {
       val root = Files.createTempDirectory(s"graft_fixture_${kind}_")
       fixtureRoots.add(root)
-      val inDir = root.resolve("in")
-      build(inDir)
-      inDir
-    })
-
-  /** Drop (and delete from disk) every cached fixture built for
-    * `sfDir` — the per-rung release a ladder harness calls when a
-    * scale rung completes: fixtures are keyed by corpus dir and a
-    * finished rung never returns to its corpus, so holding its bucket
-    * dirs (10M-event parquet at the 100× rung) until JVM shutdown is
-    * pure scratch-disk growth. Safe mid-session: the next request for
-    * a dropped (sfDir, kind) simply rebuilds. */
-  def dropCachedFixtures(sfDir: String): Unit =
-    fixtureCache.keys.filter(_._1 == sfDir).foreach { key =>
-      fixtureCache.remove(key).foreach { inDir =>
-        val root = inDir.getParent
+      graft.BuildCache.onFree {
         fixtureRoots.remove(root)
         try rmTree(root) catch { case _: java.io.IOException => () }
       }
+      val inDir = root.resolve("in")
+      build(inDir)
+      inDir
     }
 
   /** Time-ordered (purchase|click) buckets + a watermark-flush
@@ -740,15 +724,13 @@ object StreamReplay {
     drain(intervalJoin(spark, inDir, "inner"), "append", statePartitionsFor(sfDir))(identity)
   }
 
-  /** Run `body` over the bucket dir of an op-log replay: cached per
-    * (cacheKey, kind) when the CALLER vouches the ops are a pure
-    * function of that key (KVQueries passes the source dir; specs
-    * with synthetic logs pass None and get a per-invocation fixture,
-    * deleted however `body` exits). */
-  private def withOpFixture[T](kind: String, cacheKey: Option[String])(
-      build: Path => Unit)(body: Path => T): T = cacheKey match {
-    case Some(k) => body(cachedFixture(k, kind)(build))
-    case None =>
+  /** Run `body` over the bucket dir of an op-log replay: a cached
+    * fixture keyed by the ops' plan and files when `cached`, else a
+    * per-invocation one, deleted however `body` exits. */
+  private def withOpFixture[T](kind: String, ops: Dataset[Op], cached: Boolean)(
+      build: Path => Unit)(body: Path => T): T =
+    if (cached) body(cachedFixture(kind, graft.BuildCache.of(ops.toDF()))(build))
+    else {
       val root = Files.createTempDirectory(s"graft_fixture_${kind}_")
       try {
         val inDir = root.resolve("in")
@@ -761,13 +743,13 @@ object StreamReplay {
     * (key, value) state. Blocking (AvailableNow drains the source and
     * terminates). */
   def stateReplay(ops: Dataset[Op], nBatches: Int = 4,
-      cacheKey: Option[String] = None): DataFrame = {
+      cached: Boolean = false): DataFrame = {
     val spark = ops.sparkSession
     import spark.implicits._
     require(nBatches >= 1, "nBatches must be positive")
     // stateTableReplay shares this fixture kind: both stream the same
     // deduped bucketed write log
-    withOpFixture(s"oplog-writes-$nBatches", cacheKey)(bucketedWriteLog(ops, nBatches, _)) {
+    withOpFixture(s"oplog-writes-$nBatches", ops, cached)(bucketedWriteLog(ops, nBatches, _)) {
       inDir =>
         // foldStream, not liveState: the streamed log is ALREADY
         // exactly-once (step 1), so the in-stream dropDuplicates would
@@ -802,10 +784,10 @@ object StreamReplay {
     * parquet sink. The per-client rollup is aggregated BEFORE the
     * bounded driver read. */
   def dedupReplay(ops: Dataset[Op], nBatches: Int = 4,
-      cacheKey: Option[String] = None): DataFrame = {
+      cached: Boolean = false): DataFrame = {
     val spark = ops.sparkSession
     require(nBatches >= 1, "nBatches must be positive")
-    withOpFixture(s"oplog-raw-$nBatches", cacheKey) { fixDir =>
+    withOpFixture(s"oplog-raw-$nBatches", ops, cached) { fixDir =>
       val log = ops.toDF.localCheckpoint(true)
       val maxSeqRow = log.agg(max("seq")).head()
       val maxSeq = if (maxSeqRow.isNullAt(0)) 0L else maxSeqRow.getLong(0)
@@ -853,13 +835,13 @@ object StreamReplay {
     * distinct requests) is survivor-insensitive, as stream_dedup's.
     */
   def dedupEvictReplay(ops: Dataset[Op], nBatches: Int = 4,
-      cacheKey: Option[String] = None): DataFrame = {
+      cached: Boolean = false): DataFrame = {
     val spark = ops.sparkSession
     require(nBatches == 4, "margin arithmetic below is written for 4 buckets")
     // the watermark delay (w/8 s) is derived from the log's seq range
     // and must match the cached buckets — it rides the fixture cache
     // as a sibling file
-    withOpFixture(s"oplog-evict-$nBatches", cacheKey) { fixDir =>
+    withOpFixture(s"oplog-evict-$nBatches", ops, cached) { fixDir =>
       // one row per (clientId, reqId) batch-side: the planted rows are
       // the ONLY duplicates the stream sees, so emission counts are
       // exactly n_reqs + (1 per re-admitted plant)
@@ -953,14 +935,14 @@ object StreamReplay {
     * construction). The state table, its commit markers and the
     * checkpoint are torn down after the bounded final read. */
   def stateTableReplay(ops: Dataset[Op], nBatches: Int = 4,
-      cacheKey: Option[String] = None): DataFrame = {
+      cached: Boolean = false): DataFrame = {
     val spark = ops.sparkSession
     import spark.implicits._
     require(nBatches >= 1, "nBatches must be positive")
     def stateDir(root: Path) = root.resolve("state").toString
     // same fixture kind as stateReplay: both stream the deduped
     // bucketed write log (one cached build serves both)
-    withOpFixture(s"oplog-writes-$nBatches", cacheKey)(bucketedWriteLog(ops, nBatches, _)) {
+    withOpFixture(s"oplog-writes-$nBatches", ops, cached)(bucketedWriteLog(ops, nBatches, _)) {
       inDir =>
         run(spark, Some(StatePartitions))(root =>
           LiveKV.stateTableSink(buckets(spark, inDir, OpSchema).as[Op], stateDir(root),

@@ -79,8 +79,8 @@ object AnnCapProbe {
       }
       val (coldSec, _, _) = passes.head
       val (warmSec, nPairs, d) = passes.last
-      // per-rung caches die with the rung (corpusN keys on the rung's
-      // plan; nothing retained here, but keep the ladder convention)
+      // per-rung caches die with the rung (the corpus count is keyed
+      // on the rung's plan)
       graft.pipeline.Dedup.freeRetained()
       (k, f"""{"scale":$k,"n":$n,"planes":$planes,"families":$fams,""" +
         f""""cold_sec":$coldSec%.2f,"warm_sec":$warmSec%.2f,"n_pairs":$nPairs,""" +

@@ -287,19 +287,13 @@ object ScaleBench {
         System.err.println(f"[scale] x$scale $name pass $pass: $sec%.2f s")
       }
       if (pass == Passes) canary += TaskMetricsListener.cpuCanarySec()
-      // per-rung cache release (r14 advice #4): every session cache —
-      // retained checkpoints (near-dup/span/ANN/PQ indexes, BPE
-      // tables), the PCA/corpusN memos, the streaming fixtures — is
-      // keyed by corpus dir, and a completed rung never returns to its
-      // corpus; accumulating them across the ladder OOM'd the default
-      // 8 GB driver heap at the 100× rung (the committed r14 artifacts
-      // needed SPARK_DRIVER_MEM=48g). Freed blocks rebuild on demand,
-      // so correctness is untouched; the warm-dir caches pass 1 of the
-      // NEXT rung rebuilds are that rung's cold cost, as designed.
-      if (pass == Passes) {
-        graft.pipeline.Dedup.freeRetained()
-        graft.streaming.StreamReplay.dropCachedFixtures(dir)
-      }
+      // per-rung release: a completed rung never returns to its
+      // corpus, and holding every rung's build-once artifacts
+      // (checkpointed indexes, stream fixtures) across the ladder
+      // outgrows the default 8 GB driver heap at the 100× rung. Freed
+      // entries rebuild on demand; pass 1 of the next rung pays them
+      // as that rung's cold cost.
+      if (pass == Passes) graft.pipeline.Dedup.freeRetained()
     }
 
     /** least-squares slope of log t over log scale. */

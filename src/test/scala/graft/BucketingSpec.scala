@@ -246,10 +246,7 @@ class BucketingSpec extends SparkSpec {
 
     // "restart": forget every in-session memo AND the catalog entries
     // (a new driver's in-memory catalog is empty)
-    SkippingIndex.clearSessionCache()
-    ZOrderIndex.clearSessionCache()
-    PartitionedTables.clearSessionCache()
-    BucketedTables.clearSessionCache()
+    BuildCache.clear()
     spark.sql(s"DROP TABLE IF EXISTS $liName")
     spark.sql(s"DROP TABLE IF EXISTS $ordName")
 

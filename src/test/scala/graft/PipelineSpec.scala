@@ -334,8 +334,8 @@ class PipelineSpec extends SparkSpec {
     Dedup.freeRetained()
     val d = planted
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.sortBy(_.toString)
-    val i1 = Dedup.spanIndexCached(d, "spanSpecTag")
-    assert(Dedup.spanIndexCached(d, "spanSpecTag") eq i1,
+    val i1 = Dedup.spanIndexCached(d)
+    assert(Dedup.spanIndexCached(d) eq i1,
       "second call must hit the session cache, not rebuild")
     // the index IS spanPairs' output, and the serve-path removal over
     // it is bit-identical to the train-inline form
@@ -343,7 +343,7 @@ class PipelineSpec extends SparkSpec {
     assert(rows(Dedup.removeSpansFromIndex(d, i1)) == rows(Dedup.removeSpans(d)))
     // freeRetained invalidates cache + checkpoint blocks together
     Dedup.freeRetained()
-    val i2 = Dedup.spanIndexCached(d, "spanSpecTag")
+    val i2 = Dedup.spanIndexCached(d)
     assert(!(i2 eq i1))
     assert(rows(i2) == rows(Dedup.spanPairs(d)))
     Dedup.freeRetained()
@@ -353,8 +353,8 @@ class PipelineSpec extends SparkSpec {
     import graft.pipeline.Graph
     Dedup.freeRetained() // start from a clean cache
     val d = planted
-    val i1 = Dedup.nearDupIndexCached(d, "specTag")
-    assert(Dedup.nearDupIndexCached(d, "specTag") eq i1,
+    val i1 = Dedup.nearDupIndexCached(d)
+    assert(Dedup.nearDupIndexCached(d) eq i1,
       "second call must hit the session cache, not rebuild")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.sortBy(_.toString)
     assert(rows(Dedup.clusterSizesFromIndex(d, i1.clusters)) == rows(Dedup.clusterSizes(d)))
@@ -366,7 +366,7 @@ class PipelineSpec extends SparkSpec {
     // (a cleared eager checkpoint cannot be recomputed): next call
     // builds fresh
     Dedup.freeRetained()
-    val i3 = Dedup.nearDupIndexCached(d, "specTag")
+    val i3 = Dedup.nearDupIndexCached(d)
     assert(!(i3 eq i1))
     assert(rows(i3.clusters) == rows(Dedup.components(Dedup.minhashCandidates(d))))
     Dedup.freeRetained()
@@ -376,16 +376,16 @@ class PipelineSpec extends SparkSpec {
     val e = Tables.embeddings(spark, sf0001)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("probe_id", "rank").collect().toSeq
-    val (cb1, codes1) = Similarity.pqIndexCached(e, "specTag")
-    assert(Similarity.pqIndexCached(e, "specTag")._2 eq codes1)
+    val (cb1, codes1) = Similarity.pqIndexCached(e)
+    assert(Similarity.pqIndexCached(e)._2 eq codes1)
     assert(rows(Similarity.pqTopKFromIndex(e, cb1, codes1, 0L to 9L, 5)) ==
       rows(Similarity.pqTopK(e, 0L to 9L, 5)))
-    val (cent, cb2, cc) = Similarity.ivfPqIndexCached(e, "specTag")
-    assert(Similarity.ivfPqIndexCached(e, "specTag")._3 eq cc)
+    val (cent, cb2, cc) = Similarity.ivfPqIndexCached(e)
+    assert(Similarity.ivfPqIndexCached(e)._3 eq cc)
     assert(rows(Similarity.ivfPqTopKFromIndex(e, cent, cb2, cc, 0L to 9L, 5)) ==
       rows(Similarity.ivfPqTopK(e, 0L to 9L, 5)))
     Dedup.freeRetained()
-    assert(!(Similarity.pqIndexCached(e, "specTag")._2 eq codes1),
+    assert(!(Similarity.pqIndexCached(e)._2 eq codes1),
       "freeRetained must invalidate the pq cache entry")
     Dedup.freeRetained()
   }
@@ -395,19 +395,19 @@ class PipelineSpec extends SparkSpec {
     val e = Tables.embeddings(spark, sf0001)
     val d = docs
     Dedup.freeRetained()
-    val pairs = Similarity.annPairsCached(e, "specTag")
-    assert(Similarity.annPairsCached(e, "specTag") eq pairs)
+    val pairs = Similarity.annPairsCached(e)
+    assert(Similarity.annPairsCached(e) eq pairs)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.sortBy(_.toString)
     assert(rows(Dedup.embeddingNearDupsFromPairs(d, pairs)) ==
       rows(Dedup.embeddingNearDups(d, e)))
     assert(rows(Graph.similarityCentralityFromPairs(e, pairs)) ==
       rows(Graph.similarityCentrality(e)))
-    val (assign, cent) = Similarity.ivfKmeansIndexCached(e, "specTag")
-    assert(Similarity.ivfKmeansIndexCached(e, "specTag")._1 eq assign)
+    val (assign, cent) = Similarity.ivfKmeansIndexCached(e)
+    assert(Similarity.ivfKmeansIndexCached(e)._1 eq assign)
     assert(rows(Similarity.ivfTopKNprobe(assign, cent, 0L to 9L, 5, Similarity.KmeansNprobe)) ==
       rows(Similarity.ivfTopKKmeans(e, 0L to 9L, 5)))
     Dedup.freeRetained()
-    assert(!(Similarity.annPairsCached(e, "specTag") eq pairs),
+    assert(!(Similarity.annPairsCached(e) eq pairs),
       "freeRetained must invalidate the annPairs cache entry")
     Dedup.freeRetained()
   }
@@ -441,8 +441,8 @@ class PipelineSpec extends SparkSpec {
   test("pca artifacts round-trip through parquet: deflation + projection serve identically") {
     val e = Tables.embeddings(spark, sf0001)
     Dedup.freeRetained()
-    val mm = Similarity.scatterMatrixCached(e, "diskTag")
-    val v1 = Similarity.pcaTopCached(e, "diskTag")
+    val mm = Similarity.scatterMatrixCached(e)
+    val v1 = Similarity.pcaTopCached(e)
     val dir = java.nio.file.Files.createTempDirectory("graft_pca_idx").toString
     Similarity.writePcaIndex(mm, v1, dir)
     val (rmm, rv1) = Similarity.readPcaIndex(spark, dir)
@@ -460,17 +460,17 @@ class PipelineSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("probe_id", "rank").collect().toSeq
     val dir = java.nio.file.Files.createTempDirectory("graft_ann_idx").toString
-    val (cb, codes) = Similarity.pqIndexCached(e, "diskTag")
+    val (cb, codes) = Similarity.pqIndexCached(e)
     Similarity.writePqIndex(cb, codes, s"$dir/pq")
     val (rcb, rcodes) = Similarity.readPqIndex(spark, s"$dir/pq")
     assert(rows(Similarity.pqTopKFromIndex(e, rcb, rcodes, 0L to 9L, 5)) ==
       rows(Similarity.pqTopKFromIndex(e, cb, codes, 0L to 9L, 5)))
-    val (cent, cb2, cc) = Similarity.ivfPqIndexCached(e, "diskTag")
+    val (cent, cb2, cc) = Similarity.ivfPqIndexCached(e)
     Similarity.writeIvfPqIndex(cent, cb2, cc, s"$dir/ivfpq")
     val (rcent, rcb2, rcc) = Similarity.readIvfPqIndex(spark, s"$dir/ivfpq")
     assert(rows(Similarity.ivfPqTopKFromIndex(e, rcent, rcb2, rcc, 0L to 9L, 5)) ==
       rows(Similarity.ivfPqTopKFromIndex(e, cent, cb2, cc, 0L to 9L, 5)))
-    val (assign, kcent) = Similarity.ivfKmeansIndexCached(e, "diskTag")
+    val (assign, kcent) = Similarity.ivfKmeansIndexCached(e)
     Similarity.writeIvfIndex(assign, kcent, s"$dir/ivf")
     val (rassign, rkcent) = Similarity.readIvfIndex(spark, s"$dir/ivf")
     assert(rows(Similarity.ivfTopKNprobe(rassign, rkcent, 0L to 9L, 5, Similarity.KmeansNprobe)) ==
@@ -481,12 +481,12 @@ class PipelineSpec extends SparkSpec {
   test("semanticDedup: scala replay of the epsilon-ball rule; drops observed both ways") {
     val e = Tables.embeddings(spark, sf0001)
     Dedup.freeRetained()
-    val out = Similarity.semanticDedup(e, "semTag")
+    val out = Similarity.semanticDedup(e)
       .as[(Long, Long, Long, Long, String)].collect()
       .map(r => r._1 -> (r._2, r._3, r._4, r._5)).toMap
     // independent replay: collect the (bounded) assignment and apply
     // the rule in plain Scala
-    val (assign, _) = Similarity.ivfKmeansIndexCached(e, "semTag")
+    val (assign, _) = Similarity.ivfKmeansIndexCached(e)
     val rows = assign.select("vec_id", "cell", "q", "n2")
       .as[(Long, Long, Seq[Long], Long)].collect()
     val byCell = rows.groupBy(_._2)
@@ -508,7 +508,7 @@ class PipelineSpec extends SparkSpec {
       s"degenerate fixture: $nDrop dropped of ${out.size}")
     // mega-cell guard: with a cap below every cell size, every vector
     // reports membership-only (no pairwise balls computed)
-    val mega = Similarity.semanticDedup(e, "semTag", maxCell = 1L)
+    val mega = Similarity.semanticDedup(e, maxCell = 1L)
       .as[(Long, Long, Long, Long, String)].collect()
     assert(mega.nonEmpty && mega.forall(r =>
       r._5 == "mega" && r._3 == 0L && r._4 == -1L))
@@ -596,13 +596,13 @@ class PipelineSpec extends SparkSpec {
 
   test("bpeApplyCached: tokenizer artifact is build-once; rows identical to the inline train") {
     Dedup.freeRetained()
-    val c1 = TextAnalysis.bpeApplyCached(planted, "specTag", 2)
-    assert(TextAnalysis.bpeApplyCached(planted, "specTag", 2) eq c1,
+    val c1 = TextAnalysis.bpeApplyCached(planted, 2)
+    assert(TextAnalysis.bpeApplyCached(planted, 2) eq c1,
       "second call must hit the session cache, not retrain")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.sortBy(_.toString)
     assert(rows(c1) == rows(TextAnalysis.bpeApply(planted, 2)))
     Dedup.freeRetained()
-    assert(!(TextAnalysis.bpeApplyCached(planted, "specTag", 2) eq c1),
+    assert(!(TextAnalysis.bpeApplyCached(planted, 2) eq c1),
       "freeRetained must invalidate the tokenizer cache entry")
     Dedup.freeRetained()
   }
@@ -1954,20 +1954,20 @@ class PipelineSpec extends SparkSpec {
   test("pcaTopCached serves the identical component; project matches inline") {
     val e = Tables.embeddings(spark, sf0001)
     val inline = Similarity.pcaTop(e).as[(Long, Long)].collect().toSeq.sorted
-    val cached = Similarity.pcaTopCached(e, "spec").as[(Long, Long)].collect().toSeq.sorted
-    val cached2 = Similarity.pcaTopCached(e, "spec").as[(Long, Long)].collect().toSeq.sorted
+    val cached = Similarity.pcaTopCached(e).as[(Long, Long)].collect().toSeq.sorted
+    val cached2 = Similarity.pcaTopCached(e).as[(Long, Long)].collect().toSeq.sorted
     assert(inline == cached && cached == cached2)
     val pInline = Similarity.pcaProject(e).as[(Long, Long)].collect().toSeq.sorted
     val pServed = Similarity
-      .pcaProjectFromIndex(Similarity.pcaTopCached(e, "spec"), e)
+      .pcaProjectFromIndex(Similarity.pcaTopCached(e), e)
       .as[(Long, Long)].collect().toSeq.sorted
     assert(pInline == pServed)
     // the deflation serve path (cached scatter matrix + cached v₁)
     // must replay the train-inline second component bit-for-bit
     val p2Inline = Similarity.pcaTop2(e).as[(Long, Long)].collect().toSeq.sorted
     val p2Served = Similarity
-      .pcaTop2FromIndex(Similarity.scatterMatrixCached(e, "spec"),
-        Similarity.pcaTopCached(e, "spec"))
+      .pcaTop2FromIndex(Similarity.scatterMatrixCached(e),
+        Similarity.pcaTopCached(e))
       .as[(Long, Long)].collect().toSeq.sorted
     assert(p2Inline == p2Served)
   }

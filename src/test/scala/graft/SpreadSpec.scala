@@ -84,7 +84,7 @@ class SpreadSpec extends SparkSpec {
     val d = spark.read.parquet(s"$sf0001/documents.parquet")
     val inline = Dedup.lshRecall(d, bandRows = 1).collect().toSet
     val cached = Dedup.lshRecall(d, bandRows = 1,
-      caughtPairs = Some(Dedup.candidatePairsCached(d, "spreadspec-b8", bandRows = 1)))
+      caughtPairs = Some(Dedup.candidatePairsCached(d, bandRows = 1)))
       .collect().toSet
     assert(cached == inline,
       "the cached per-preset pair table must reproduce the inline band self-join")
@@ -92,8 +92,8 @@ class SpreadSpec extends SparkSpec {
     // a distinct table. A pair caught by a 2-row band (both minhashes
     // of the band collide) is always caught by 1-row banding (each
     // minhash alone is a band), so default ⊆ b8 — never the same entry.
-    val defDf = Dedup.candidatePairsCached(d, "spreadspec-b8")
-    val b8Df = Dedup.candidatePairsCached(d, "spreadspec-b8", bandRows = 1)
+    val defDf = Dedup.candidatePairsCached(d)
+    val b8Df = Dedup.candidatePairsCached(d, bandRows = 1)
     assert(!(defDf eq b8Df), "presets must not share one cache entry")
     val defPairs = defDf.select("doc_a", "doc_b").collect().toSet
     val b8Pairs = b8Df.select("doc_a", "doc_b").collect().toSet

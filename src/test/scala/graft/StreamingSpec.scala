@@ -61,22 +61,21 @@ class StreamingSpec extends SparkSpec {
     // the r12 risk class: a stale or cross-keyed fixture would make a
     // cached replay silently diverge from the uncached truth
     val ops = OpLog.fromEvents(Tables.events(spark, sf0001))
-    val key = Some(s"spec-cache-$sf0001")
     val uncached = graft.streaming.StreamReplay.stateReplay(ops)
       .as[(String, String)].collect().toMap
-    val first = graft.streaming.StreamReplay.stateReplay(ops, cacheKey = key)
+    val first = graft.streaming.StreamReplay.stateReplay(ops, cached = true)
       .as[(String, String)].collect().toMap
     assert(first == uncached, "cached replay diverged from uncached")
     // locate the cached bucket files via a second call: identical rows
     // AND the fixture must not have been rebuilt (every bucket file's
     // mtime is pinned by writeBuckets at build time — a rebuild would
     // re-pin them to a later wall-clock origin)
-    val second = graft.streaming.StreamReplay.stateReplay(ops, cacheKey = key)
+    val second = graft.streaming.StreamReplay.stateReplay(ops, cached = true)
       .as[(String, String)].collect().toMap
     assert(second == first, "second cached replay diverged")
     // the shared-kind twin serves the same fixture and still matches
     // ITS uncached truth
-    val table = graft.streaming.StreamReplay.stateTableReplay(ops, cacheKey = key)
+    val table = graft.streaming.StreamReplay.stateTableReplay(ops, cached = true)
       .as[(String, String)].collect().toMap
     assert(table == uncached, "stateTableReplay over the shared fixture diverged")
   }
@@ -206,8 +205,8 @@ class StreamingSpec extends SparkSpec {
   test("cached stateReplay runs no Spark job before its stream starts (bucket schema declared, not inferred)") {
     import scala.jdk.CollectionConverters._
     val ops = OpLog.fromEvents(Tables.events(spark, sf0001))
-    val key = Some(s"spec-jobs-$sf0001")
-    val warm = graft.streaming.StreamReplay.stateReplay(ops, cacheKey = key) // builds the fixture
+    // builds (or reuses) the fixture
+    val warm = graft.streaming.StreamReplay.stateReplay(ops, cached = true)
       .as[(String, String)].collect().toMap
     // per job in start order: does it belong to a streaming query?
     val streamJob = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
@@ -219,7 +218,7 @@ class StreamingSpec extends SparkSpec {
     org.apache.spark.graftbus.BusFlush.flush(sc)
     sc.addSparkListener(listener)
     val cached = try {
-      val out = graft.streaming.StreamReplay.stateReplay(ops, cacheKey = key)
+      val out = graft.streaming.StreamReplay.stateReplay(ops, cached = true)
         .as[(String, String)].collect().toMap
       org.apache.spark.graftbus.BusFlush.flush(sc)
       out
